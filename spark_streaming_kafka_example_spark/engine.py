@@ -68,6 +68,17 @@ def _default_parallelism() -> int:
     return os.cpu_count() or 8
 
 
+def _default_driver_memory() -> str:
+    """Half of physical RAM, capped at 16g: a fixed 16g heap on a smaller
+    host lets the driver JVM grow past what the machine has."""
+    cap_mb = 16 * 1024
+    try:
+        ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    except (ValueError, OSError, AttributeError):  # no sysconf (non-POSIX)
+        return f"{cap_mb}m"
+    return f"{max(min(ram_mb // 2, cap_mb), 1024)}m"
+
+
 def get_session(
     app_name: str = "spark_streaming_kafka_example_spark",
     master: str | None = None,
@@ -104,7 +115,10 @@ def get_session(
         # get_session call), it is silently ignored; launch paths that need a
         # guaranteed heap must set it via spark-submit/SPARK_DRIVER_MEMORY
         # before the first session is created.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -57,6 +57,21 @@ def _centroid_literal_array(cent_rows, k: int):
             f" {len(cent_rows)} — a corpus-size-dependent centroid set"
             " cannot be embedded as plan literals"
         )
+    import math
+
+    bad = [
+        (r["cent_id"], x)
+        for r in cent_rows
+        for x in r["cv"]
+        if not math.isfinite(float(x))
+    ]
+    if bad:
+        # repr(nan)/repr(inf) render as nanD/infD — unparseable SQL that
+        # would otherwise surface later as an opaque parse error
+        raise ValueError(
+            f"centroid values must be finite; got {bad[0][1]!r} in "
+            f"centroid {bad[0][0]} ({len(bad)} non-finite values)"
+        )
     parts = [
         "named_struct('cent_id', {cid}, 'cv', array({cv}))".format(
             cid=int(r["cent_id"]),

@@ -1,6 +1,6 @@
 """Streaming queries run to a deterministic batch-equivalent result
 (SURVEY §5 streaming determinism): bounded file source +
-trigger(availableNow=True) + memory sink; ``awaitTermination`` returns when
+trigger(availableNow=True) + memory sink; ``drain`` returns when
 the backlog is drained, and the memory table is the exact table a batch run
 would produce — so the same DuckDB SQL oracles the streaming machinery
 (incremental window aggregation, stream-static join, state store).
@@ -14,6 +14,9 @@ from __future__ import annotations
 
 import os
 import uuid
+from dataclasses import dataclass, field, replace
+from functools import partial, reduce
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
@@ -130,6 +133,31 @@ def embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# How long drain() waits for a bounded query: far above any drain here
+# (seconds at sf0.1), so only a query that never terminates reaches it —
+# e.g. a state timeout that keeps an availableNow drain alive forever.
+_DRAIN_DEADLINE_S = 1800
+
+
+def drain(query) -> None:
+    """Wait for a bounded (availableNow) query to finish. A query that
+    failed re-raises its own exception; one still running at the deadline
+    is stopped and reported with its name, last batch id and last
+    progress instead of hanging the caller."""
+    if query.awaitTermination(_DRAIN_DEADLINE_S):  # raises on failure
+        return
+    last = query.lastProgress
+    query.stop()
+    failure = query.exception()  # a failure racing the deadline wins
+    if failure is not None:
+        raise failure
+    raise TimeoutError(
+        f"streaming query {query.name or query.id} did not drain within "
+        f"{_DRAIN_DEADLINE_S}s; last batch "
+        f"{last['batchId'] if last else None}, lastProgress={last}"
+    )
+
+
 def run_to_table(
     spark: SparkSession,
     df: DataFrame,
@@ -158,7 +186,7 @@ def run_to_table(
     """
     name = f"mem_{uuid.uuid4().hex[:10]}"
     query = memory_sink(df, name, mode=mode)
-    query.awaitTermination()
+    drain(query)
     if require_single_batch and mode != "update":
         data_batches = sum(
             1 for p in query.recentProgress if p["numInputRows"] > 0
@@ -453,35 +481,36 @@ def stream_dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# At-ingest dedup with a PERSISTED fingerprint store (r16): the dedup twin
-# of the incremental IVF appendix, and the production shape
-# dedup_incremental_exact (plans/llm.py:176) sketches — the store is not a
-# one-shot relation but a partitioned table MAINTAINED at ingest: each
-# micro-batch's decisions join against the store as of arrival, and the
-# batch's novel fingerprints append as their own batch_id partition via
-# dynamic partition overwrite (replays overwrite themselves). Cross-batch
-# duplicates are therefore decided by fingerprints an EARLIER micro-batch
-# appended — the store maintenance is load-bearing for the emitted
-# statuses, which is exactly what the shared-semantics oracle hash proves
-# (first-arrival-wins: arrival order is id order by construction, so the
-# oracle's min-doc_id-per-fp rank replays the decisions batch-split-free).
-
-from .llm import _FP_SQL as _LLM_FP_SQL  # noqa: E402  (one fp definition)
+# Maintained-state ingest: one arm spec per family, one runner.
 #
-# Scale: per batch this is |batch| fingerprints (computed in-scan) against
-# an fp-keyed store read — prune with a Bloom/min-max prefilter over the
-# store partitions at 100 TB (layout_bloom_prefilter is that pattern) —
-# and the append writes |novel fps in batch| rows, never rewriting the
-# store. Statuses land in their own partitioned table, also idempotent.
+# Every maintained-state family (fp store and its Bloom twin, minhash band
+# catalog, image chunk catalog, embedding catalog, gate v2/v3, incremental
+# cluster map) shares one lifecycle: seed -> id-ordered arrivals ->
+# foreachBatch -> drain -> (compact) -> read-back, with an optional TTL on
+# the state reads. An _Arm declares what differs — its state relations
+# and their schemas, seed builders, arrival parts and the per-batch
+# decide(); _run_arm owns everything else. The sink contract is
+# foreachBatch's idempotent one (Structured Streaming, SIGMOD 2018): every
+# write is a dynamic overwrite of THIS batch's batch_id partition, and
+# every state read sees only batch_id < current (read-your-predecessors —
+# reading your own appended partition would flip a replayed batch's
+# novel decisions to duplicate). A crash between overlapped sibling
+# writes therefore replays clean, whichever subset landed.
+#
+# Mid-lifecycle compaction (compact=True) ingests parts[:2], collapses
+# every state relation into one fresh batch_id=-1 seed partition, and
+# ingests parts[2:] against it (fresh checkpoint, batch ids restart at 0
+# > -1, so the whole compacted state stays visible). The compaction twins
+# register against their plain twin's oracle, so the hash proves the
+# collapse loses and invents nothing while decisions are still being made
+# against it.
 # ---------------------------------------------------------------------------
 
-
-# Used for the independent state writes inside the foreachBatch
-# maintenance handlers and the independent seed/arrival writes in their
-# setups — at any scale these jobs share no lineage ordering requirement
-# (each targets its own directory and replay overwrites per-partition),
-# so overlapping them costs nothing and collapses the serialized
-# per-job latency the driver otherwise pays.
+# Used for the independent state writes of each ingest batch and the
+# independent seed/arrival writes before it — at any scale these jobs
+# share no lineage ordering requirement (each targets its own directory
+# and replay overwrites per-partition), so overlapping them costs nothing
+# and collapses the serialized per-job latency the driver otherwise pays.
 from ..engine import run_parallel as _run_jobs  # noqa: E402
 
 
@@ -489,13 +518,13 @@ def _write_id_ordered_arrivals(src_dir: str, parts: list) -> None:
     """Write each part as one file with ascending mtimes so the file
     source replays them IN ORDER under maxFilesPerTrigger=1 — arrival
     order == doc_id order is what lets a first-arrival-wins oracle rank
-    by doc_id (shared by the fp-store and minhash-catalog ingests).
+    by doc_id (shared by every maintained-state arm).
 
     r19: ONE Spark job writes every part (partitionBy on the part tag,
     one task per part, then the partition dirs rename into the b{i}
     layout the reader globs) — the per-part coalesce(1) writes paid one
     serialized job + commit per part. Intra-file row order changes
-    (shuffle by tag), which no consumer observes: every handler decides
+    (shuffle by tag), which no consumer observes: every arm decides
     by doc_id rank / set joins, never by arrival-row position, and the
     oracles replay by doc_id. One file per part is guaranteed (the
     dynamic-partition writer opens one file per partition value per
@@ -565,14 +594,11 @@ def _id_range_parts(
     ]
 
 
-# Explicit state-relation schemas (r20, guide §6 / r19 VERDICT task 1):
-# every per-batch state read names the WRITER's schema instead of
-# re-inferring it from parquet footers — measured ~70-95 ms of
-# driver-side footer-read latency saved per read on this host, paid 1-3x
-# per micro-batch by every maintenance handler. batch_id is the
-# partition column every state write appends (int: F.lit(batch_id)).
-# The strings must track the writers exactly; schemas were captured from
-# the live relations (simpleString) when introduced.
+# The DDL schema of each state relation (batch_id is the int partition
+# column every write appends). Declared once: the writer's output is
+# pinned to it (test_arm_state_schema_matches_declaration) and every
+# per-batch read names it instead of inferring parquet footers (~70-95 ms
+# of driver-side latency per read).
 _FP_STORE_SCHEMA = "fp string, batch_id int"
 _BLOOM_BITS_SCHEMA = "pos bigint, batch_id int"
 _MH_CATALOG_SCHEMA = (
@@ -587,20 +613,90 @@ _EMB_VECS_SCHEMA = "doc_id long, embedding array<float>, batch_id int"
 _CLUSTER_MAP_SCHEMA = (
     "doc_id long, rep_id long, rep_fp string, batch_id int"
 )
+_DOC_ARRIVAL_SCHEMA = "doc_id long, text string"
+_EMB_ARRIVAL_SCHEMA = "doc_id long, embedding array<float>"
+
+
+def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table(spark, sf_dir, "documents").select("doc_id", "text")
+
+
+@dataclass(frozen=True)
+class _Arm:
+    """One maintained-state ingest family.
+
+    ``state`` maps each state relation to its DDL schema; ``seeds`` maps
+    a relation to the builder of its batch_id=-1 partition (relations
+    without one start empty). ``load`` yields the source relation that
+    seeds and ``parts`` (the id-ordered arrival parts, one micro-batch
+    each) derive from. ``decide(batch, batch_id, visible)`` returns the
+    batch's writes: ``{"decisions": ..., <relation>: appends, ...}``,
+    where ``visible(name)`` is the relation as this batch may see it
+    (None while a seedless arm has no state yet). ``ttl`` windows every
+    read to the last W batches; ``expires=False`` marks state whose rows
+    reference each other, which no window may age out. ``out`` is the
+    read-back projection (selectExpr strings)."""
+
+    name: str
+    state: dict
+    decide: Callable
+    parts: Callable
+    out: tuple
+    seeds: dict = field(default_factory=dict)
+    load: Callable = _docs
+    arrival_schema: str = _DOC_ARRIVAL_SCHEMA
+    ttl: int | None = None
+    expires: bool = True
+
+    def __post_init__(self):
+        if self.ttl is not None and not self.expires:
+            raise TypeError(f"arm {self.name} has state that cannot expire")
+
+
+def _arm_dirs(arm: _Arm, root: str) -> dict:
+    """The runner's directory layout under one phase root."""
+    return {
+        n: os.path.join(root, n)
+        for n in (*arm.state, "decisions", "arrivals", "ckpt")
+    }
 
 
 def _read_state(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    """Partitioned state-dir read with the writer's explicit schema (no
-    per-batch footer inference — see the schema constants above)."""
     return spark.read.schema(schema).parquet(path)
+
+
+def _visible(spark: SparkSession, arm: _Arm, root: str, batch_id: int):
+    """``visible(name)`` for one batch: the relation's partitions with
+    batch_id < current (and >= current - ttl under a TTL), read with the
+    declared schema — both bounds reach the scan as partition filters.
+    An arm's state dirs exist all together or not at all (a half-seeded
+    arm fails here, not as an opaque read error mid-stream)."""
+    dirs = _arm_dirs(arm, root)
+    present = {n: os.path.isdir(dirs[n]) for n in arm.state}
+    if len(set(present.values())) > 1:
+        raise RuntimeError(
+            f"arm {arm.name}: state dirs out of sync before batch "
+            f"{batch_id}: {present}"
+        )
+
+    def visible(name: str) -> DataFrame | None:
+        if not present[name]:
+            return None
+        rel = _read_state(spark, dirs[name], arm.state[name]).filter(
+            F.col("batch_id") < batch_id
+        )
+        if arm.ttl is not None:
+            rel = rel.filter(F.col("batch_id") >= batch_id - arm.ttl)
+        return rel
+
+    return visible
 
 
 def _overwrite_batch_partition(
     df: DataFrame, path: str, batch_id: int
 ) -> None:
     """Write df as THIS batch's (batch_id=...) partition via dynamic
-    overwrite — the exactly-once idiom every ingest-maintenance handler
-    shares: a replayed batch overwrites its own partition instead of
+    overwrite: a replayed batch overwrites its own partition instead of
     double-appending."""
     (
         df.withColumn("batch_id", F.lit(batch_id))
@@ -611,82 +707,196 @@ def _overwrite_batch_partition(
     )
 
 
-def _fp_store_ranked(
-    store_dir: str,
-    fps: DataFrame,
-    batch_id: int,
-    retention_batches: int | None = None,
-) -> DataFrame:
-    """Exact-dup decision relation shared by the store handlers: the batch's
-    (doc_id, fp) rows ranked within-batch by doc_id per fp and left-joined
-    against the store AS OF this batch — only partitions appended by
-    EARLIER batches (batch_id is the partition key, so this prunes at
-    scan). Without the bound a REPLAYED batch would see its own appended
-    fps and flip its novel decisions to duplicate — the exactly-once
-    contract needs read-your-predecessors, never read-yourself (pinned by
-    test_dedup_store_cross_batch_maintenance's replay).
-    ``retention_batches`` additionally EXPIRES old state: only partitions
-    with batch_id >= current - W are visible (the seed -1 ages out after
-    W batches like any other append), so content re-admits after W
-    batches of absence — still a partition-pruned scan, now bounded on
-    BOTH sides. Output columns: the fps columns + rn + hit (True / null)."""
-    from pyspark.sql import Window
-
-    store = _read_state(
-        fps.sparkSession, store_dir, _FP_STORE_SCHEMA
-    ).filter(F.col("batch_id") < batch_id)
-    if retention_batches is not None:
-        store = store.filter(
-            F.col("batch_id") >= batch_id - retention_batches
-        )
-    store = store.select("fp").distinct()
-    w = Window.partitionBy("fp").orderBy("doc_id")
-    return fps.withColumn("rn", F.row_number().over(w)).join(
-        store.withColumn("hit", F.lit(True)), "fp", "left_outer"
-    )
-
-
-def _dedup_store_handler(
-    store_dir: str,
-    decisions_dir: str,
-    retention_batches: int | None = None,
-):
-    """foreachBatch handler: decide novel/duplicate against the store AS
-    OF this batch, then append this batch's novel fps. Both writes are
-    (batch_id)-partitioned dynamic overwrites — exactly-once on replay.
-    With ``retention_batches`` the decision window is the TTL'd store
-    (see _fp_store_ranked); a re-admitted fp appends again under its new
-    batch_id, restarting its lifetime — duplicates never refresh it."""
-    from ..functions.text import fingerprint
+def _arm_handler(arm: _Arm, root: str):
+    """The foreachBatch handler: decide against the visible state, then
+    write decisions and every relation's appends as overlapped
+    batch-partition overwrites (independent dirs, so the writes share no
+    ordering requirement)."""
 
     def handler(batch_df: DataFrame, batch_id: int) -> None:
-        fps = batch_df.select(
-            "doc_id", fingerprint("text").alias("fp")
-        ).localCheckpoint()  # one derivation feeds decisions AND the append
-        ranked = _fp_store_ranked(store_dir, fps, batch_id, retention_batches)
-        # The two state writes are independent (own dirs, replay
-        # overwrites per-partition) — overlap them (r19, guide §2.6).
+        dirs = _arm_dirs(arm, root)
+        writes = arm.decide(
+            batch_df,
+            batch_id,
+            _visible(batch_df.sparkSession, arm, root, batch_id),
+        )
+        if set(writes) != {"decisions", *arm.state}:
+            raise ValueError(
+                f"arm {arm.name}: decide wrote {sorted(writes)}, expected "
+                f"decisions + {sorted(arm.state)}"
+            )
         _run_jobs(
-            lambda: _overwrite_batch_partition(
-                ranked.select(
-                    "doc_id",
-                    F.when(F.col("hit") | (F.col("rn") > 1), "duplicate")
-                    .otherwise("novel")
-                    .alias("status"),
-                ),
-                decisions_dir,
-                batch_id,
-            ),
-            lambda: _overwrite_batch_partition(
-                ranked.filter(
-                    F.col("hit").isNull() & (F.col("rn") == 1)
-                ).select("fp"),
-                store_dir,
-                batch_id,
-            ),
+            *(
+                lambda n=n, df=df: _overwrite_batch_partition(
+                    df, dirs[n], batch_id
+                )
+                for n, df in writes.items()
+            )
         )
 
     return handler
+
+
+def _seed_state(rows: DataFrame, state_dir: str) -> None:
+    """Write the pre-ingest state as the batch_id=-1 partition."""
+    rows.withColumn("batch_id", F.lit(-1)).write.partitionBy(
+        "batch_id"
+    ).parquet(state_dir)
+
+
+def _compact_state(
+    spark: SparkSession, state_dir: str, out_dir: str, schema: str
+) -> None:
+    """Collapse every batch_id partition of a state relation into ONE
+    fresh batch_id=-1 seed partition. A pure rewrite: appends are
+    novel-only (store) or per-doc-unique (catalogs, map), so no dedup
+    pass is needed.
+
+    UNBOUNDED STATE ONLY: under a TTL the store re-appends re-admitted
+    fps (the novel-only premise breaks), and collapsing to -1 destroys
+    per-row age, so just-expired content would come back. TTL-compatible
+    compaction would rewrite files within each partition instead."""
+    _seed_state(_read_state(spark, state_dir, schema).drop("batch_id"), out_dir)
+
+
+def _arrivals_stream(
+    spark: SparkSession, src_dir: str, schema: str
+) -> DataFrame:
+    """One file per micro-batch over the id-ordered arrival files."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src_dir + "/*")
+    )
+
+
+def _run_arm(
+    spark: SparkSession, sf_dir: str, arm: _Arm, compact: bool = False
+) -> DataFrame:
+    """Run one arm end to end and return its read-back decisions: seed
+    writes overlapped with the arrival write, the drained foreachBatch
+    ingest, and with ``compact`` the mid-ingest compaction of every state
+    relation (see the section comment)."""
+    from ..streaming.sinks import foreach_batch_sink
+
+    from . import tmp_run_dir
+
+    if compact and arm.ttl is not None:
+        raise TypeError(
+            f"arm {arm.name}: compaction collapses per-row age, so it "
+            "cannot run under a TTL window"
+        )
+    base = tmp_run_dir(arm.name + "_")
+    roots = [os.path.join(base, p) for p in "ab"] if compact else [base]
+    dirs = [_arm_dirs(arm, root) for root in roots]
+    cut = 2 if compact else None  # phase A ingests parts[:2]
+    src = arm.load(spark, sf_dir)
+
+    def arrive() -> list:
+        parts = arm.parts(src)
+        _write_id_ordered_arrivals(dirs[0]["arrivals"], parts[:cut])
+        return parts
+
+    def ingest(phase: int) -> None:
+        drain(
+            foreach_batch_sink(
+                _arrivals_stream(
+                    spark, dirs[phase]["arrivals"], arm.arrival_schema
+                ),
+                _arm_handler(arm, roots[phase]),
+                checkpoint=dirs[phase]["ckpt"],
+                mode="append",
+            )
+        )
+
+    *_, parts = _run_jobs(
+        *(
+            lambda n=n, build=build: _seed_state(build(src), dirs[0][n])
+            for n, build in arm.seeds.items()
+        ),
+        arrive,
+    )
+    ingest(0)
+    if compact:
+        a, b = dirs
+        _run_jobs(
+            *(
+                lambda n=n: _compact_state(spark, a[n], b[n], arm.state[n])
+                for n in arm.state
+            ),
+            lambda: _write_id_ordered_arrivals(b["arrivals"], parts[cut:]),
+        )
+        ingest(1)
+    return reduce(
+        DataFrame.unionByName,
+        [spark.read.parquet(d["decisions"]) for d in dirs],
+    ).selectExpr(*arm.out)
+
+
+# ---------------------------------------------------------------------------
+# At-ingest dedup with a PERSISTED fingerprint store (r16): the dedup twin
+# of the incremental IVF appendix, and the production shape
+# dedup_incremental_exact (plans/llm.py:176) sketches — the store is not a
+# one-shot relation but a partitioned table MAINTAINED at ingest: each
+# micro-batch's decisions join against the store as of arrival, and the
+# batch's novel fingerprints append as their own batch_id partition via
+# dynamic partition overwrite (replays overwrite themselves). Cross-batch
+# duplicates are therefore decided by fingerprints an EARLIER micro-batch
+# appended — the store maintenance is load-bearing for the emitted
+# statuses, which is exactly what the shared-semantics oracle hash proves
+# (first-arrival-wins: arrival order is id order by construction, so the
+# oracle's min-doc_id-per-fp rank replays the decisions batch-split-free).
+
+from .llm import _FP_SQL as _LLM_FP_SQL  # noqa: E402  (one fp definition)
+#
+# Scale: per batch this is |batch| fingerprints (computed in-scan) against
+# an fp-keyed store read — prune with a Bloom/min-max prefilter over the
+# store partitions at 100 TB (layout_bloom_prefilter is that pattern) —
+# and the append writes |novel fps in batch| rows, never rewriting the
+# store. Statuses land in their own partitioned table, also idempotent.
+# ---------------------------------------------------------------------------
+
+
+def _fp_store_ranked(fps: DataFrame, store: DataFrame) -> DataFrame:
+    """Exact-dup decision relation shared by the store arms: the batch's
+    (doc_id, fp) rows ranked within-batch by doc_id per fp and left-joined
+    against the visible store. Output columns: the fps columns + rn +
+    hit (True / null)."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("fp").orderBy("doc_id")
+    return fps.withColumn("rn", F.row_number().over(w)).join(
+        store.select("fp").distinct().withColumn("hit", F.lit(True)),
+        "fp",
+        "left_outer",
+    )
+
+
+def _is_dup():
+    return F.col("hit") | (F.col("rn") > 1)
+
+
+def _is_novel():
+    return F.col("hit").isNull() & (F.col("rn") == 1)
+
+
+def _fp_decide(batch_df: DataFrame, batch_id: int, visible) -> dict:
+    """novel/duplicate against the visible store; append the batch's
+    novel fps. Under a TTL a re-admitted fp appends again under its new
+    batch_id, restarting its lifetime — duplicates never refresh it."""
+    from ..functions.text import fingerprint
+
+    fps = batch_df.select(
+        "doc_id", fingerprint("text").alias("fp")
+    ).localCheckpoint()  # one derivation feeds decisions AND the append
+    ranked = _fp_store_ranked(fps, visible("store"))
+    return {
+        "decisions": ranked.select(
+            "doc_id",
+            F.when(_is_dup(), "duplicate").otherwise("novel").alias("status"),
+        ),
+        "store": ranked.filter(_is_novel()).select("fp"),
+    }
 
 
 # Re-crawl plant ids = doc_id + _FP_PLANT_OFFSET. The offset must exceed
@@ -723,13 +933,6 @@ STREAM_DEDUP_STORE_ORACLE = f"""
     """
 
 
-def _seed_state(rows: DataFrame, state_dir: str) -> None:
-    """Write the pre-ingest state as the batch_id=-1 partition."""
-    rows.withColumn("batch_id", F.lit(-1)).write.partitionBy(
-        "batch_id"
-    ).parquet(state_dir)
-
-
 def _fp_store_seed(docs: DataFrame) -> DataFrame:
     """The ingested corpus's distinct fingerprints (even doc ids)."""
     from ..functions.text import fingerprint
@@ -752,40 +955,14 @@ def _fp_arrival_parts(docs: DataFrame) -> list:
     return _id_range_parts(odds, plants, plant_offset=_FP_PLANT_OFFSET)
 
 
-def _arrivals_stream(
-    spark: SparkSession,
-    src_dir: str,
-    schema: str = "doc_id long, text string",
-) -> DataFrame:
-    """One file per micro-batch over the id-ordered arrival files. The
-    default schema is the document ingests'; the embedding-catalog arm
-    passes its vector schema (id column stays doc_id — the shared
-    id-ordered plumbing keys on it)."""
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir + "/*")
-    )
-
-
-def _fp_store_setup(spark: SparkSession, sf_dir: str, prefix: str):
-    """Seed the fingerprint store (batch_id=-1) and write the id-ordered
-    arrival files — the shared setup of both store-ingest variants.
-    Returns (base_dir, store_dir, decisions_dir, arrivals stream)."""
-    from . import tmp_run_dir
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    base_dir = tmp_run_dir(prefix)
-    store_dir = os.path.join(base_dir, "store")
-    decisions_dir = os.path.join(base_dir, "decisions")
-    src_dir = os.path.join(base_dir, "arrivals")
-
-    # Seed and arrival writes are independent jobs — overlap (r19 §2.6).
-    _run_jobs(
-        lambda: _seed_state(_fp_store_seed(docs), store_dir),
-        lambda: _write_id_ordered_arrivals(src_dir, _fp_arrival_parts(docs)),
-    )
-    return base_dir, store_dir, decisions_dir, _arrivals_stream(spark, src_dir)
+_FP_ARM = _Arm(
+    name="fpstore",
+    state={"store": _FP_STORE_SCHEMA},
+    seeds={"store": _fp_store_seed},
+    parts=_fp_arrival_parts,
+    decide=_fp_decide,
+    out=("doc_id", "status"),
+)
 
 
 @register("stream_dedup_store_ingest", STREAM_DEDUP_STORE_ORACLE)
@@ -798,19 +975,7 @@ def stream_dedup_store_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     later copy — same batch, later batch, or seeded — reads 'duplicate'.
     Cross-file odd/odd copies make the APPENDED partitions load-bearing
     (pytest: test_dedup_store_cross_batch_maintenance)."""
-    from ..streaming.sinks import foreach_batch_sink
-
-    base_dir, store_dir, decisions_dir, arriving = _fp_store_setup(
-        spark, sf_dir, "fpstore_"
-    )
-    q = foreach_batch_sink(
-        arriving,
-        _dedup_store_handler(store_dir, decisions_dir),
-        checkpoint=os.path.join(base_dir, "ckpt"),
-        mode="append",
-    )
-    q.awaitTermination()
-    return spark.read.parquet(decisions_dir).select("doc_id", "status")
+    return _run_arm(spark, sf_dir, _FP_ARM)
 
 
 # ---------------------------------------------------------------------------
@@ -854,21 +1019,28 @@ def _store_bloom_bits(fps: DataFrame, m: int) -> DataFrame:
     return out.distinct()
 
 
-def _dedup_store_bloom_handler(
-    store_dir: str, decisions_dir: str, bits_dir: str, m: int
-):
-    """The _dedup_store_handler contract with a Bloom gate in front of
-    the store join: possible = fps passing ALL k set-bit checks (chained
-    left-semi joins on the position columns, the r11 probe's stateless
-    form); only those join the store. Appends novel fps AND their set
-    bits, both (batch_id)-partitioned dynamic overwrites with the same
-    read-your-predecessors bound."""
+def _fp_bloom_arm() -> _Arm:
+    """The fp-store arm behind the Bloom gate, built per run because m is
+    sized when the bits are seeded. decide is the fp-store contract
+    except that only fps passing ALL k set-bit checks (chained left-semi
+    joins on the position columns) join the store; novel fps append to
+    the store AND their set bits to the bits relation."""
     from pyspark.sql import Window
 
     from ..functions.text import fingerprint
 
-    def handler(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    sized = {}
+
+    def seed_bits(docs: DataFrame) -> DataFrame:
+        seed = _fp_store_seed(docs)
+        n_seed = seed.count()  # one scalar: sizes m for the store's lifetime
+        sized["m"] = min(
+            _STORE_BLOOM_M_CAP, 1 << max(8 * n_seed - 1, 1).bit_length()
+        )
+        return _store_bloom_bits(seed, sized["m"])
+
+    def decide(batch_df: DataFrame, batch_id: int, visible) -> dict:
+        m = sized["m"]
         fps = batch_df.select(
             "doc_id", fingerprint("text").alias("fp")
         ).localCheckpoint()
@@ -877,12 +1049,7 @@ def _dedup_store_bloom_handler(
             *[_store_bloom_pos(F.col("fp"), m, j)
               for j in range(_STORE_BLOOM_K)],
         )
-        bits = (
-            _read_state(spark, bits_dir, _BLOOM_BITS_SCHEMA)
-            .filter(F.col("batch_id") < batch_id)
-            .select("pos")
-            .distinct()
-        )
+        bits = visible("bloombits").select("pos").distinct()
         possible = cand
         for j in range(_STORE_BLOOM_K):
             possible = possible.join(
@@ -892,39 +1059,34 @@ def _dedup_store_bloom_handler(
         # ONLY possible fps touch the store (the fp-keyed join the Bloom
         # exists to spare; definite misses never read it)
         store_hits = possible.select("fp").join(
-            _read_state(spark, store_dir, _FP_STORE_SCHEMA)
-            .filter(F.col("batch_id") < batch_id)
-            .select("fp"),
-            "fp",
-            "left_semi",
+            visible("store").select("fp"), "fp", "left_semi"
         )
         w = Window.partitionBy("fp").orderBy("doc_id")
         ranked = fps.withColumn("rn", F.row_number().over(w)).join(
             store_hits.withColumn("hit", F.lit(True)), "fp", "left_outer"
         )
-        novel = ranked.filter(
-            F.col("hit").isNull() & (F.col("rn") == 1)
-        ).select("fp").localCheckpoint()  # feeds the store AND bits appends
-        # Three independent state writes (own dirs, replay overwrites
-        # per-partition) — overlap them (r19, guide §2.6).
-        _run_jobs(
-            lambda: _overwrite_batch_partition(
-                ranked.select(
-                    "doc_id",
-                    F.when(F.col("hit") | (F.col("rn") > 1), "duplicate")
-                    .otherwise("novel")
-                    .alias("status"),
-                ),
-                decisions_dir,
-                batch_id,
+        novel = ranked.filter(_is_novel()).select(
+            "fp"
+        ).localCheckpoint()  # feeds the store AND bits appends
+        return {
+            "decisions": ranked.select(
+                "doc_id",
+                F.when(_is_dup(), "duplicate")
+                .otherwise("novel")
+                .alias("status"),
             ),
-            lambda: _overwrite_batch_partition(novel, store_dir, batch_id),
-            lambda: _overwrite_batch_partition(
-                _store_bloom_bits(novel, m), bits_dir, batch_id
-            ),
-        )
+            "store": novel,
+            "bloombits": _store_bloom_bits(novel, m),
+        }
 
-    return handler
+    return _Arm(
+        name="fpbloom",
+        state={"store": _FP_STORE_SCHEMA, "bloombits": _BLOOM_BITS_SCHEMA},
+        seeds={"store": _fp_store_seed, "bloombits": seed_bits},
+        parts=_fp_arrival_parts,
+        decide=decide,
+        out=("doc_id", "status"),
+    )
 
 
 @register("stream_dedup_store_bloom_ingest", STREAM_DEDUP_STORE_ORACLE)
@@ -936,31 +1098,7 @@ def stream_dedup_store_bloom_ingest(
     but the store-join traffic (no false negatives). Prune effectiveness
     and decision equality pinned by
     tests/test_streaming.py::test_dedup_store_bloom_prunes_and_agrees."""
-    from ..streaming.sinks import foreach_batch_sink
-
-    base_dir, store_dir, decisions_dir, arriving = _fp_store_setup(
-        spark, sf_dir, "fpbloom_"
-    )
-    bits_dir = os.path.join(base_dir, "bloombits")
-
-    seed = _read_state(spark, store_dir, _FP_STORE_SCHEMA).select("fp")
-    n_seed = seed.count()  # one scalar: sizes m for the store's lifetime
-    m = min(_STORE_BLOOM_M_CAP, 1 << max(8 * n_seed - 1, 1).bit_length())
-    (
-        _store_bloom_bits(seed, m)
-        .withColumn("batch_id", F.lit(-1))
-        .write.partitionBy("batch_id")
-        .parquet(bits_dir)
-    )
-
-    q = foreach_batch_sink(
-        arriving,
-        _dedup_store_bloom_handler(store_dir, decisions_dir, bits_dir, m),
-        checkpoint=os.path.join(base_dir, "ckpt"),
-        mode="append",
-    )
-    q.awaitTermination()
-    return spark.read.parquet(decisions_dir).select("doc_id", "status")
+    return _run_arm(spark, sf_dir, _fp_bloom_arm())
 
 
 # ---------------------------------------------------------------------------
@@ -1199,7 +1337,7 @@ def _build_base_and_appendix(
         checkpoint=os.path.join(base_dir, "ckpt"),
         mode="append",
     )
-    q.awaitTermination()
+    drain(q)
     return base, appendix
 
 
@@ -2109,7 +2247,7 @@ def k4_parquet_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev, os.path.join(base, "data"), os.path.join(base, "ckpt"),
         partition_by="month",
     )
-    q.awaitTermination()
+    drain(q)
     back = spark.read.parquet(os.path.join(base, "data"))
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -2138,7 +2276,7 @@ def k6_foreach_batch_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         checkpoint=os.path.join(base, "ckpt"),
         mode="append",
     )
-    q.awaitTermination()
+    drain(q)
     back = spark.read.parquet(out)  # batch_id partition column rides along
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -2172,8 +2310,8 @@ def k8_multi_sink_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     mem_name = f"k8_mem_{uuid.uuid4().hex[:8]}"
     q1 = parquet_sink(ev, out, os.path.join(base, "ckpt"))
     q2 = memory_sink(ev, mem_name, mode="append")
-    q1.awaitTermination()
-    q2.awaitTermination()
+    drain(q1)
+    drain(q2)
     back = spark.read.parquet(out)
     n_parquet, n_mem = back.count(), spark.table(mem_name).count()
     if n_parquet != n_mem:
@@ -2206,10 +2344,10 @@ def t2_checkpoint_restart_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
     base = _tmp_sink_dir("t2_restart_")
     out, ckpt = os.path.join(base, "data"), os.path.join(base, "ckpt")
     ev = events_stream(spark, sf_dir).select("event_id", "event_type")
-    parquet_sink(ev, out, ckpt).awaitTermination()
+    drain(parquet_sink(ev, out, ckpt))
     # restart on the same checkpoint: must be a no-op, not a re-ingest
     ev2 = events_stream(spark, sf_dir).select("event_id", "event_type")
-    parquet_sink(ev2, out, ckpt).awaitTermination()
+    drain(parquet_sink(ev2, out, ckpt))
     back = spark.read.parquet(out)
     return back.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
 
@@ -2242,7 +2380,7 @@ def t3_default_checkpoint_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+        drain(q)
     finally:
         if prev is None:
             spark.conf.unset("spark.sql.streaming.checkpointLocation")
@@ -3109,47 +3247,33 @@ def stream_minhash_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _mh_catalog_handler(
-    catalog_dir: str,
-    decisions_dir: str,
-    retention_batches: int | None = None,
-):
-    """foreachBatch handler: band the batch, count DISTINCT prior docs
-    (earlier partitions + same-batch smaller ids) sharing >= 1 band per
-    arriving doc, append the batch's band rows. Both writes are
-    (batch_id)-partitioned dynamic overwrites — exactly-once on replay,
-    and the batch_id < current catalog bound keeps a REPLAYED batch from
-    banding against its own rows. ``retention_batches`` windows the
-    probe to the last W batches' band rows (see _catalog_prior_hits);
-    appends are unchanged — an expired doc's bands simply stop being
-    probed, and would age back in only by re-arriving."""
+def _count_decisions(batch: DataFrame, hits: DataFrame, col: str) -> DataFrame:
+    """Per arriving doc, its number of (doc_id, prior_id) hit rows as
+    ``col`` (0 without any) — the decision shape of the catalog arms."""
+    counts = hits.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    return (
+        batch.select("doc_id")
+        .join(counts, "doc_id", "left_outer")
+        .select(
+            "doc_id",
+            F.coalesce(F.col("n"), F.lit(0)).cast("long").alias(col),
+        )
+    )
 
-    def handler(batch_df: DataFrame, batch_id: int) -> None:
-        bands = _batch_band_rows(batch_df)
-        hits = _catalog_prior_hits(
-            catalog_dir, bands, batch_id, retention_batches
-        )
-        counts = hits.distinct().groupBy("doc_id").agg(
-            F.count(F.lit(1)).alias("n")
-        )
-        # Independent writes (own dirs) — overlap them (r19, guide §2.6).
-        _run_jobs(
-            lambda: _overwrite_batch_partition(
-                batch_df.select("doc_id")
-                .join(counts, "doc_id", "left_outer")
-                .select(
-                    "doc_id",
-                    F.coalesce(F.col("n"), F.lit(0))
-                    .cast("long")
-                    .alias("n_prior_candidates"),
-                ),
-                decisions_dir,
-                batch_id,
-            ),
-            lambda: _overwrite_batch_partition(bands, catalog_dir, batch_id),
-        )
 
-    return handler
+def _mh_decide(batch_df: DataFrame, batch_id: int, visible) -> dict:
+    """Band the batch, count DISTINCT prior docs (visible catalog rows +
+    same-batch smaller ids) sharing >= 1 band per arriving doc, append
+    the batch's band rows. Under a TTL an expired doc's bands simply stop
+    being probed; it would age back in only by re-arriving."""
+    bands = _batch_band_rows(batch_df)
+    hits = _catalog_prior_hits(bands, visible("catalog"))
+    return {
+        "decisions": _count_decisions(
+            batch_df, hits.distinct(), "n_prior_candidates"
+        ),
+        "catalog": bands,
+    }
 
 
 def _batch_band_rows(batch_df: DataFrame) -> DataFrame:
@@ -3186,43 +3310,32 @@ def _batch_band_rows(batch_df: DataFrame) -> DataFrame:
 
 
 def _catalog_prior_hits(
-    catalog_dir: str,
-    bands: DataFrame,
-    batch_id: int,
-    retention_batches: int | None = None,
+    bands: DataFrame, catalog: DataFrame | None
 ) -> DataFrame:
     """(doc_id, prior_id) band collisions against every PRIOR ingested
-    doc: catalog partitions appended by earlier batches (batch_id <
-    current — the read-your-predecessors bound) plus same-batch rows with
-    a smaller doc_id (arrival order is id order by construction).
-    ``retention_batches`` EXPIRES old band rows: only partitions with
-    batch_id >= current - W stay visible (the seed ages out after W
-    batches), bounding the probe scan by the window. Unlike the fp
-    store, catalog visibility is NOT recursive — every ingested doc's
-    bands append regardless of status, so a row is visible iff its
-    batch is in the window. May contain duplicates; callers distinct()
-    as needed."""
-    prior = _read_state(
-        bands.sparkSession, catalog_dir, _MH_CATALOG_SCHEMA
-    ).filter(F.col("batch_id") < batch_id)
-    if retention_batches is not None:
-        prior = prior.filter(
-            F.col("batch_id") >= batch_id - retention_batches
-        )
-    prior = prior.select(
+    doc: the visible catalog rows plus same-batch rows with a smaller
+    doc_id (arrival order is id order by construction). Catalog
+    visibility is NOT recursive — every ingested doc's bands append
+    regardless of status, so under a TTL a row is visible iff its batch
+    is in the window. ``catalog`` None (a seedless arm's first batch)
+    probes within the batch alone. May contain duplicates; callers
+    distinct() as needed."""
+    within = _within_batch_band_hits(bands)
+    if catalog is None:
+        return within
+    prior = catalog.select(
         "band_id", "band_val", F.col("doc_id").alias("prior_id")
     )
-    hits_prior = bands.join(prior, ["band_id", "band_val"]).select(
-        "doc_id", "prior_id"
+    return (
+        bands.join(prior, ["band_id", "band_val"])
+        .select("doc_id", "prior_id")
+        .unionByName(within)
     )
-    return hits_prior.unionByName(_within_batch_band_hits(bands))
 
 
 def _within_batch_band_hits(bands: DataFrame) -> DataFrame:
     """(doc_id, prior_id) same-batch band collisions with a smaller
-    doc_id — the batch-bounded self-join arm of _catalog_prior_hits,
-    factored (r18) so the first micro-batch of a seedless ingest (no
-    catalog directory yet) can probe within itself alone."""
+    doc_id — the batch-bounded self-join arm of _catalog_prior_hits."""
     return (
         bands.join(
             bands.select(
@@ -3286,43 +3399,7 @@ def stream_minhash_catalog_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
     frozen-catalog probe's, and odd/odd near-dups arriving in different
     files are counted via partitions an earlier batch APPENDED (pinned by
     tests/test_streaming.py::test_minhash_catalog_cross_batch_growth)."""
-    return _mh_catalog_run(spark, sf_dir, "mhcat_")
-
-
-def _mh_catalog_run(
-    spark: SparkSession,
-    sf_dir: str,
-    prefix: str,
-    retention_batches: int | None = None,
-) -> DataFrame:
-    """Seed the band catalog, stream the id-ordered arrivals through the
-    catalog handler, return the drained decisions — the one ingest body
-    shared by the unbounded and TTL'd registrations."""
-    from ..streaming.sinks import foreach_batch_sink
-
-    from . import tmp_run_dir
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    base_dir = tmp_run_dir(prefix)
-    catalog_dir = os.path.join(base_dir, "catalog")
-    decisions_dir = os.path.join(base_dir, "decisions")
-    src_dir = os.path.join(base_dir, "arrivals")
-
-    # Seed and arrival writes are independent jobs — overlap (r19 §2.6).
-    _run_jobs(
-        lambda: _seed_state(_mh_catalog_seed(docs), catalog_dir),
-        lambda: _write_id_ordered_arrivals(src_dir, _mh_arrival_parts(docs)),
-    )
-    q = foreach_batch_sink(
-        _arrivals_stream(spark, src_dir),
-        _mh_catalog_handler(catalog_dir, decisions_dir, retention_batches),
-        checkpoint=os.path.join(base_dir, "ckpt"),
-        mode="append",
-    )
-    q.awaitTermination()
-    return spark.read.parquet(decisions_dir).select(
-        "doc_id", "n_prior_candidates"
-    )
+    return _run_arm(spark, sf_dir, _MH_ARM)
 
 
 def _mh_catalog_seed(docs: DataFrame) -> DataFrame:
@@ -3357,99 +3434,23 @@ def _mh_arrival_parts(docs: DataFrame) -> list:
     return _id_range_parts(odds, plants, plant_offset=_MH_PLANT_OFFSET)
 
 
+_MH_ARM = _Arm(
+    name="mhcat",
+    state={"catalog": _MH_CATALOG_SCHEMA},
+    seeds={"catalog": _mh_catalog_seed},
+    parts=_mh_arrival_parts,
+    decide=_mh_decide,
+    out=("doc_id", "n_prior_candidates"),
+)
+
+
 # ---------------------------------------------------------------------------
-# Mid-lifecycle state compaction (r17, r16 VERDICT stretch task 8): the
-# IVF index got its housekeeping arm (sim_ivf_compacted_probe); the fp
-# store and band catalog accumulate one partition per micro-batch
-# FOREVER — at one batch per minute that is half a million partitions a
-# year, and the per-batch "batch_id < current" scan pays for every one
-# of them. Compaction collapses all partitions into a single fresh seed
-# partition (one read, one write, off the ingest path — the directory-
-# swap deployment sim_ivf_compacted_probe documents). The proof is
-# STRONGER than compact-at-end: compaction runs MID-INGEST — the first
-# half of the arrival files maintain state_a, the collapsed rewrite
-# seeds state_b, and the remaining files ingest against state_b — and
-# the union of both phases' decisions registers against the SAME oracle
-# as the uninterrupted ingest, so the driver hash proves compaction
-# loses and invents nothing while decisions are still being made
-# against it. Phase B's fresh checkpoint restarts batch ids at 0 > -1,
-# so the read-your-predecessors bound sees the whole compacted state.
+# Compaction twins: maintained state accumulates one partition per
+# micro-batch forever (half a million a year at one batch per minute), and
+# the per-batch "batch_id < current" scan pays for every one. Compaction
+# collapses them mid-ingest (see the runner's section comment), and each
+# twin shares its plain twin's oracle.
 # ---------------------------------------------------------------------------
-
-
-def _compact_state(
-    spark: SparkSession,
-    state_dir: str,
-    out_dir: str,
-    schema: str | None = None,
-) -> None:
-    """Collapse every batch_id partition of an ingest-maintained state
-    into ONE fresh batch_id=-1 seed partition. Pure rewrite: appends are
-    novel-only (store) / per-doc-unique (catalog), so no dedup pass is
-    needed — one scan in, one partition out.
-
-    UNBOUNDED STATE ONLY — incompatible with the retention handlers: a
-    TTL'd store re-appends re-admitted fps under new batch_ids (the
-    novel-only premise breaks), and collapsing to -1 destroys per-row
-    AGE — just-expired content would resurrect for W more batches, then
-    the whole store would expire at once at batch W. TTL-compatible
-    compaction must rewrite FILES WITHIN each batch_id partition,
-    preserving the partition keys — a different operation."""
-    rows = (
-        _read_state(spark, state_dir, schema)
-        if schema is not None
-        else spark.read.parquet(state_dir)
-    )
-    _seed_state(rows.drop("batch_id"), out_dir)
-
-
-def _compacted_two_phase_ingest(
-    spark: SparkSession,
-    prefix: str,
-    seed_rows: DataFrame,
-    parts: list,
-    make_handler,
-    state_schema: str | None = None,
-):
-    """Seed state, ingest parts[:2], COMPACT, ingest parts[2:] against
-    the compacted state; return the two decisions dirs. Shared by the
-    state-maintenance compaction twins (fp store / band catalog / image
-    chunk catalog). ``make_handler`` is called with an EXPLICIT
-    ``retention_batches=None`` — _compact_state is unbounded-state-only
-    (see its docstring), so a factory curried with a TTL window fails
-    here with a TypeError instead of silently corrupting the retention
-    semantics (r17 ADVICE: the caveat must be checkable, not prose)."""
-    from ..streaming.sinks import foreach_batch_sink
-
-    from . import tmp_run_dir
-
-    base_dir = tmp_run_dir(prefix)
-    state_a = os.path.join(base_dir, "state_a")
-    state_b = os.path.join(base_dir, "state_b")
-    dec_a = os.path.join(base_dir, "dec_a")
-    dec_b = os.path.join(base_dir, "dec_b")
-
-    _seed_state(seed_rows, state_a)
-    _write_id_ordered_arrivals(os.path.join(base_dir, "arr_a"), parts[:2])
-    q = foreach_batch_sink(
-        _arrivals_stream(spark, os.path.join(base_dir, "arr_a")),
-        make_handler(state_a, dec_a, retention_batches=None),
-        checkpoint=os.path.join(base_dir, "ckpt_a"),
-        mode="append",
-    )
-    q.awaitTermination()
-
-    _compact_state(spark, state_a, state_b, schema=state_schema)
-
-    _write_id_ordered_arrivals(os.path.join(base_dir, "arr_b"), parts[2:])
-    q = foreach_batch_sink(
-        _arrivals_stream(spark, os.path.join(base_dir, "arr_b")),
-        make_handler(state_b, dec_b, retention_batches=None),
-        checkpoint=os.path.join(base_dir, "ckpt_b"),
-        mode="append",
-    )
-    q.awaitTermination()
-    return dec_a, dec_b
 
 
 @register("stream_dedup_store_compacted", STREAM_DEDUP_STORE_ORACLE)
@@ -3459,20 +3460,7 @@ def stream_dedup_store_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     the combined decisions share the uninterrupted ingest's oracle, so
     the driver hash proves the collapsed store preserves every
     first-arrival-wins decision."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    dec_a, dec_b = _compacted_two_phase_ingest(
-        spark,
-        "fpcompact_",
-        _fp_store_seed(docs),
-        _fp_arrival_parts(docs),
-        _dedup_store_handler,
-        state_schema=_FP_STORE_SCHEMA,
-    )
-    return (
-        spark.read.parquet(dec_a)
-        .unionByName(spark.read.parquet(dec_b))
-        .select("doc_id", "status")
-    )
+    return _run_arm(spark, sf_dir, _FP_ARM, compact=True)
 
 
 @register("stream_minhash_catalog_compacted", STREAM_MH_CATALOG_ORACLE)
@@ -3483,20 +3471,7 @@ def stream_minhash_catalog_compacted(
     mid-lifecycle; shares the growing-catalog oracle, so the hash proves
     the collapsed catalog still bands every later arrival against every
     prior doc."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    dec_a, dec_b = _compacted_two_phase_ingest(
-        spark,
-        "mhcompact_",
-        _mh_catalog_seed(docs),
-        _mh_arrival_parts(docs),
-        _mh_catalog_handler,
-        state_schema=_MH_CATALOG_SCHEMA,
-    )
-    return (
-        spark.read.parquet(dec_a)
-        .unionByName(spark.read.parquet(dec_b))
-        .select("doc_id", "n_prior_candidates")
-    )
+    return _run_arm(spark, sf_dir, _MH_ARM, compact=True)
 
 
 # ---------------------------------------------------------------------------
@@ -3523,6 +3498,7 @@ def stream_minhash_catalog_compacted(
 # ---------------------------------------------------------------------------
 
 _FP_TTL_W = 2
+_FP_TTL_ARM = replace(_FP_ARM, name="fpttl", ttl=_FP_TTL_W)
 
 STREAM_DEDUP_STORE_RETENTION_ORACLE = f"""
     WITH newbatch AS (
@@ -3581,21 +3557,7 @@ def stream_dedup_store_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     arriving after the seed aged out read 'novel' where the unbounded
     store reads 'duplicate' (expiry pinned by
     test_dedup_store_retention_expires_and_readmits)."""
-    from ..streaming.sinks import foreach_batch_sink
-
-    base_dir, store_dir, decisions_dir, arriving = _fp_store_setup(
-        spark, sf_dir, "fpttl_"
-    )
-    q = foreach_batch_sink(
-        arriving,
-        _dedup_store_handler(
-            store_dir, decisions_dir, retention_batches=_FP_TTL_W
-        ),
-        checkpoint=os.path.join(base_dir, "ckpt"),
-        mode="append",
-    )
-    q.awaitTermination()
-    return spark.read.parquet(decisions_dir).select("doc_id", "status")
+    return _run_arm(spark, sf_dir, _FP_TTL_ARM)
 
 
 # The band catalog's TTL twin. Unlike the fp store, catalog retention is
@@ -3606,6 +3568,7 @@ def stream_dedup_store_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 # derives every corpus doc's batch id (seed -1, arrival thirds, plants
 # 3), and the prior rule adds the window bound.
 _MH_TTL_W = 2
+_MH_TTL_ARM = replace(_MH_ARM, name="mhttl", ttl=_MH_TTL_W)
 
 STREAM_MH_CATALOG_RETENTION_ORACLE = f"""
     WITH corpus AS (
@@ -3669,9 +3632,7 @@ def stream_minhash_catalog_retention(
     seed ages out at batch W and the plants' truncated sources stop
     being counted once out of window (expiry pinned by
     test_minhash_catalog_retention_expires)."""
-    return _mh_catalog_run(
-        spark, sf_dir, "mhttl_", retention_batches=_MH_TTL_W
-    )
+    return _run_arm(spark, sf_dir, _MH_TTL_ARM)
 
 
 # ---------------------------------------------------------------------------
@@ -3743,100 +3704,49 @@ def _image_chunk_rows(batch_df: DataFrame) -> DataFrame:
 
 
 def _image_catalog_prior_hits(
-    catalog_dir: str,
-    chunks: DataFrame,
-    batch_id: int,
-    retention_batches: int | None = None,
+    chunks: DataFrame, catalog: DataFrame
 ) -> DataFrame:
     """(doc_id, prior_id) hamming<=3 image near-dups against every PRIOR
     ingested doc — the image twin of _catalog_prior_hits: chunk-keyed
     candidate equi-joins (pigeonhole-complete) + the hamming verify in
-    codegen, over catalog partitions batch_id < current plus same-batch
-    smaller ids. ``retention_batches`` EXPIRES old chunk rows exactly
-    like the band catalog's window (non-recursive — every ingested doc's
-    chunks append regardless of status, so a row is visible iff its
-    batch is in [current - W, current)). May contain duplicates; callers
-    distinct()."""
+    codegen, over the visible catalog rows plus same-batch smaller ids.
+    May contain duplicates; callers distinct()."""
     from ..operators.dedup import phash_hamming
 
-    prior = _read_state(
-        chunks.sparkSession, catalog_dir, _IMG_CATALOG_SCHEMA
-    ).filter(F.col("batch_id") < batch_id)
-    if retention_batches is not None:
-        prior = prior.filter(
-            F.col("batch_id") >= batch_id - retention_batches
-        )
-    prior = (
-        prior
-        .select(
+    def keyed(rel: DataFrame) -> DataFrame:
+        return rel.select(
             "chunk_id",
             "chunk_val",
             F.col("doc_id").alias("prior_id"),
             F.col("phash").alias("p_phash"),
         )
-    )
+
+    near = phash_hamming(F.col("phash"), F.col("p_phash")) <= 3
     hits_prior = (
-        chunks.join(prior, ["chunk_id", "chunk_val"])
-        .filter(phash_hamming(F.col("phash"), F.col("p_phash")) <= 3)
+        chunks.join(keyed(catalog), ["chunk_id", "chunk_val"])
+        .filter(near)
         .select("doc_id", "prior_id")
     )
     hits_within = (
-        chunks.join(
-            chunks.select(
-                "chunk_id",
-                "chunk_val",
-                F.col("doc_id").alias("prior_id"),
-                F.col("phash").alias("p_phash"),
-            ),
-            ["chunk_id", "chunk_val"],
-        )
-        .filter(
-            (F.col("prior_id") < F.col("doc_id"))
-            & (phash_hamming(F.col("phash"), F.col("p_phash")) <= 3)
-        )
+        chunks.join(keyed(chunks), ["chunk_id", "chunk_val"])
+        .filter((F.col("prior_id") < F.col("doc_id")) & near)
         .select("doc_id", "prior_id")
     )
     return hits_prior.unionByName(hits_within)
 
 
-def _image_catalog_handler(
-    catalog_dir: str,
-    decisions_dir: str,
-    retention_batches: int | None = None,
-):
-    """foreachBatch handler: fingerprint the batch's images, count
-    DISTINCT prior near-dups (earlier partitions + same-batch smaller
-    ids, hamming <= 3), append the batch's chunk rows. Both writes are
-    dynamic-overwrite batch partitions — exactly-once on replay.
-    ``retention_batches`` windows the probe to the last W batches'
-    chunk rows (see _image_catalog_prior_hits); appends are unchanged."""
-
-    def handler(batch_df: DataFrame, batch_id: int) -> None:
-        chunks = _image_chunk_rows(batch_df)
-        hits = _image_catalog_prior_hits(
-            catalog_dir, chunks, batch_id, retention_batches
-        )
-        counts = hits.distinct().groupBy("doc_id").agg(
-            F.count(F.lit(1)).alias("n")
-        )
-        # Independent writes (own dirs) — overlap them (r19, guide §2.6).
-        _run_jobs(
-            lambda: _overwrite_batch_partition(
-                batch_df.select("doc_id")
-                .join(counts, "doc_id", "left_outer")
-                .select(
-                    "doc_id",
-                    F.coalesce(F.col("n"), F.lit(0))
-                    .cast("long")
-                    .alias("n_prior_candidates"),
-                ),
-                decisions_dir,
-                batch_id,
-            ),
-            lambda: _overwrite_batch_partition(chunks, catalog_dir, batch_id),
-        )
-
-    return handler
+def _img_decide(batch_df: DataFrame, batch_id: int, visible) -> dict:
+    """Fingerprint the batch's images, count DISTINCT prior near-dups
+    (visible catalog rows + same-batch smaller ids, hamming <= 3), append
+    the batch's chunk rows."""
+    chunks = _image_chunk_rows(batch_df)
+    hits = _image_catalog_prior_hits(chunks, visible("catalog"))
+    return {
+        "decisions": _count_decisions(
+            batch_df, hits.distinct(), "n_prior_candidates"
+        ),
+        "catalog": chunks,
+    }
 
 
 @register("stream_image_catalog_ingest", STREAM_IMAGE_CATALOG_ORACLE)
@@ -3847,50 +3757,7 @@ def stream_image_catalog_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-upload of an image that arrived two micro-batches ago is caught
     via the chunk rows that batch appended (stream_image_phash's frozen
     catalog cannot)."""
-    from ..streaming.sinks import foreach_batch_sink
-
-    from . import tmp_run_dir
-
-    return _image_catalog_run(spark, sf_dir, "imgcat_")
-
-
-def _image_catalog_run(
-    spark: SparkSession,
-    sf_dir: str,
-    prefix: str,
-    retention_batches: int | None = None,
-) -> DataFrame:
-    """Seed the chunk catalog, stream the id-ordered arrivals through the
-    image-catalog handler, return the drained decisions — the one ingest
-    body shared by the unbounded and TTL'd registrations (the
-    _mh_catalog_run convention)."""
-    from ..streaming.sinks import foreach_batch_sink
-
-    from . import tmp_run_dir
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    base_dir = tmp_run_dir(prefix)
-    catalog_dir = os.path.join(base_dir, "catalog")
-    decisions_dir = os.path.join(base_dir, "decisions")
-    src_dir = os.path.join(base_dir, "arrivals")
-
-    # Seed and arrival writes are independent jobs — overlap (r19 §2.6).
-    _run_jobs(
-        lambda: _seed_state(_image_catalog_seed(docs), catalog_dir),
-        lambda: _write_id_ordered_arrivals(
-            src_dir, _image_arrival_parts(docs)
-        ),
-    )
-    q = foreach_batch_sink(
-        _arrivals_stream(spark, src_dir),
-        _image_catalog_handler(catalog_dir, decisions_dir, retention_batches),
-        checkpoint=os.path.join(base_dir, "ckpt"),
-        mode="append",
-    )
-    q.awaitTermination()
-    return spark.read.parquet(decisions_dir).select(
-        "doc_id", "n_prior_candidates"
-    )
+    return _run_arm(spark, sf_dir, _IMG_ARM)
 
 
 def _image_catalog_seed(docs: DataFrame) -> DataFrame:
@@ -3917,6 +3784,16 @@ def _image_arrival_parts(docs: DataFrame) -> list:
     return _id_range_parts(odds, plants, plant_offset=_IMG_PLANT_OFFSET)
 
 
+_IMG_ARM = _Arm(
+    name="imgcat",
+    state={"catalog": _IMG_CATALOG_SCHEMA},
+    seeds={"catalog": _image_catalog_seed},
+    parts=_image_arrival_parts,
+    decide=_img_decide,
+    out=("doc_id", "n_prior_candidates"),
+)
+
+
 # ---------------------------------------------------------------------------
 # Image-catalog lifecycle symmetry (r18, r17 VERDICT task 5): the text
 # band catalog and the fp store each have a compaction arm AND a TTL arm
@@ -3937,27 +3814,14 @@ def stream_image_catalog_compacted(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """(doc_id, n_prior_candidates): the image chunk-catalog ingest
-    compacted mid-lifecycle via the shared two-phase body; shares the
-    growing-catalog oracle, so the driver hash proves the collapsed
-    catalog still pairs every later arrival's cover against every prior
-    doc's."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    dec_a, dec_b = _compacted_two_phase_ingest(
-        spark,
-        "imgcompact_",
-        _image_catalog_seed(docs),
-        _image_arrival_parts(docs),
-        _image_catalog_handler,
-        state_schema=_IMG_CATALOG_SCHEMA,
-    )
-    return (
-        spark.read.parquet(dec_a)
-        .unionByName(spark.read.parquet(dec_b))
-        .select("doc_id", "n_prior_candidates")
-    )
+    compacted mid-lifecycle; shares the growing-catalog oracle, so the
+    driver hash proves the collapsed catalog still pairs every later
+    arrival's cover against every prior doc's."""
+    return _run_arm(spark, sf_dir, _IMG_ARM, compact=True)
 
 
 _IMG_TTL_W = 2
+_IMG_TTL_ARM = replace(_IMG_ARM, name="imgttl", ttl=_IMG_TTL_W)
 
 STREAM_IMAGE_CATALOG_RETENTION_ORACLE = f"""
     WITH corpus AS (
@@ -4011,9 +3875,7 @@ def stream_image_catalog_retention(
     seed ages out at batch W and the +plant re-crawls of seeded (even)
     covers stop being counted once the seed is out of window (expiry
     pinned by test_image_catalog_retention_expires)."""
-    return _image_catalog_run(
-        spark, sf_dir, "imgttl_", retention_batches=_IMG_TTL_W
-    )
+    return _run_arm(spark, sf_dir, _IMG_TTL_ARM)
 
 
 # ---------------------------------------------------------------------------
@@ -4075,33 +3937,6 @@ STREAM_EMB_CATALOG_ORACLE = f"""
 )
 
 
-def _emb_prior_relations(
-    spark: SparkSession,
-    codes_dir: str,
-    vecs_dir: str,
-    batch_id: int,
-    retention_batches: int | None,
-) -> tuple[DataFrame, DataFrame]:
-    """The (prior code rows, prior vectors) visible to a batch: both
-    bounded batch_id < current, both windowed to [current - W, current)
-    under retention — the bounds reach BOTH scans as partition filters
-    (pinned by test_ttl_embedding_catalog_read_pruned_both_sides)."""
-    prior_codes = _read_state(spark, codes_dir, _EMB_CODES_SCHEMA).filter(
-        F.col("batch_id") < batch_id
-    )
-    prior_store = _read_state(spark, vecs_dir, _EMB_VECS_SCHEMA).filter(
-        F.col("batch_id") < batch_id
-    )
-    if retention_batches is not None:
-        prior_codes = prior_codes.filter(
-            F.col("batch_id") >= batch_id - retention_batches
-        )
-        prior_store = prior_store.filter(
-            F.col("batch_id") >= batch_id - retention_batches
-        )
-    return prior_codes, prior_store
-
-
 def _emb_code_rows(batch_df: DataFrame) -> DataFrame:
     """(doc_id, band_id, code) hyperplane-LSH band codes for a
     micro-batch's vectors — the embedding twin of _batch_band_rows,
@@ -4121,104 +3956,48 @@ def _emb_code_rows(batch_df: DataFrame) -> DataFrame:
     )
 
 
-def _embedding_catalog_handler(
-    codes_dir: str,
-    vecs_dir: str,
-    decisions_dir: str,
-    retention_batches: int | None = None,
-):
-    """foreachBatch handler: band-code the batch's vectors, collect
-    candidate (doc_id, prior_id) band collisions (earlier partitions +
-    same-batch smaller ids), cosine-verify them round-4 against the
-    vector store, count DISTINCT verified priors, append the batch's
-    code rows and vectors. All writes dynamic-overwrite batch
-    partitions — exactly-once on replay; reads bounded batch_id <
-    current. ``retention_batches`` windows BOTH state reads to the last
-    W batches (non-recursive — every vector's rows always append, so a
-    row is visible iff its batch is in [current - W, current))."""
+def _emb_decide(batch_df: DataFrame, batch_id: int, visible) -> dict:
+    """Band-code the batch's vectors, collect candidate (doc_id,
+    prior_id) band collisions (visible code rows + same-batch smaller
+    ids), cosine-verify them round-4 against the visible vector store,
+    count DISTINCT verified priors, append the batch's code rows and
+    vectors. Under a TTL both reads window to the last W batches
+    (non-recursive — every vector's rows always append)."""
     from ..functions.vectors import cosine_pandas
 
-    def handler(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch = batch_df.localCheckpoint()
-        codes = _emb_code_rows(batch)
-        cand = (
-            codes.join(
-                codes.select(
-                    "band_id", "code", F.col("doc_id").alias("prior_id")
-                ),
-                ["band_id", "code"],
-            )
-            .filter(F.col("prior_id") < F.col("doc_id"))
-            .select("doc_id", "prior_id")
-        )
-        prior_vecs = batch.select(
-            F.col("doc_id").alias("prior_id"),
-            F.col("embedding").alias("pv"),
-        )
-        if os.path.isdir(codes_dir) != os.path.isdir(vecs_dir):
-            # fail fast on a half-seeded state pair (r18 ADVICE) instead
-            # of an opaque mid-stream AnalysisException on the lone read
-            raise RuntimeError(
-                "_embedding_catalog_handler: state dirs out of sync — "
-                f"codes={os.path.isdir(codes_dir)} "
-                f"vectors={os.path.isdir(vecs_dir)}"
-            )
-        if os.path.isdir(codes_dir):  # absent only before batch 0
-            prior_codes, prior_store = _emb_prior_relations(
-                spark, codes_dir, vecs_dir, batch_id, retention_batches
-            )
-            cand = cand.unionByName(
-                codes.join(
-                    prior_codes.select(
-                        "band_id", "code", F.col("doc_id").alias("prior_id")
-                    ),
-                    ["band_id", "code"],
-                ).select("doc_id", "prior_id")
-            )
-            prior_vecs = prior_vecs.unionByName(
-                prior_store.select(
-                    F.col("doc_id").alias("prior_id"),
-                    F.col("embedding").alias("pv"),
-                )
-            )
-        hits = (
-            cand.distinct()
-            .join(
-                batch.select("doc_id", F.col("embedding").alias("av")),
-                "doc_id",
-            )
-            .join(prior_vecs, "prior_id")
-            .filter(F.round(cosine_pandas("av", "pv"), 4) >= 0.99)
-            .select("doc_id", "prior_id")
-        )
-        counts = hits.groupBy("doc_id").agg(
-            F.count(F.lit(1)).alias("n")
-        )
-        # Independent writes (own dirs) — overlap them (r19, guide §2.6).
-        _run_jobs(
-            lambda: _overwrite_batch_partition(
-                batch.select("doc_id")
-                .join(counts, "doc_id", "left_outer")
-                .select(
-                    "doc_id",
-                    F.coalesce(F.col("n"), F.lit(0))
-                    .cast("long")
-                    .alias("n_prior_neardups"),
-                ),
-                decisions_dir,
-                batch_id,
-            ),
-            lambda: _overwrite_batch_partition(codes, codes_dir, batch_id),
-            lambda: _overwrite_batch_partition(
-                batch.select("doc_id", "embedding"), vecs_dir, batch_id
-            ),
+    batch = batch_df.localCheckpoint()
+    codes = _emb_code_rows(batch)
+
+    def keyed(rel: DataFrame) -> DataFrame:
+        return rel.select("band_id", "code", F.col("doc_id").alias("prior_id"))
+
+    def vecs(rel: DataFrame) -> DataFrame:
+        return rel.select(
+            F.col("doc_id").alias("prior_id"), F.col("embedding").alias("pv")
         )
 
-    return handler
-
-
-_EMB_ARRIVAL_SCHEMA = "doc_id long, embedding array<float>"
+    cand = (
+        codes.join(keyed(codes), ["band_id", "code"])
+        .filter(F.col("prior_id") < F.col("doc_id"))
+        .select("doc_id", "prior_id")
+        .unionByName(
+            codes.join(keyed(visible("codes")), ["band_id", "code"]).select(
+                "doc_id", "prior_id"
+            )
+        )
+    )
+    hits = (
+        cand.distinct()
+        .join(batch.select("doc_id", F.col("embedding").alias("av")), "doc_id")
+        .join(vecs(batch).unionByName(vecs(visible("vectors"))), "prior_id")
+        .filter(F.round(cosine_pandas("av", "pv"), 4) >= 0.99)
+        .select("doc_id", "prior_id")
+    )
+    return {
+        "decisions": _count_decisions(batch, hits, "n_prior_neardups"),
+        "codes": codes,
+        "vectors": batch.select("doc_id", "embedding"),
+    }
 
 
 @register("stream_embedding_catalog_ingest", STREAM_EMB_CATALOG_ORACLE)
@@ -4232,7 +4011,7 @@ def stream_embedding_catalog_ingest(
     vector: even sources dup the seed, ODD sources arrived earlier in
     the stream, so their copies are caught purely by appended
     partitions (the cross-batch catch)."""
-    return _embedding_catalog_run(spark, sf_dir, "embcat_")
+    return _run_arm(spark, sf_dir, _EMB_ARM)
 
 
 def _emb_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4261,49 +4040,19 @@ def _emb_arrival_parts(emb: DataFrame) -> list:
     return _id_range_parts(odds, plants, plant_offset=_EMBCAT_OFF)
 
 
-def _embedding_catalog_run(
-    spark: SparkSession,
-    sf_dir: str,
-    prefix: str,
-    retention_batches: int | None = None,
-) -> DataFrame:
-    """Seed the code catalog + vector store, stream the id-ordered
-    arrivals through the embedding-catalog handler, return the drained
-    decisions — the one ingest body shared by the unbounded and TTL'd
-    registrations (the _image_catalog_run convention)."""
-    from ..streaming.sinks import foreach_batch_sink
-
-    from . import tmp_run_dir
-
-    emb = _emb_table(spark, sf_dir)
-    base_dir = tmp_run_dir(prefix)
-    codes_dir = os.path.join(base_dir, "codes")
-    vecs_dir = os.path.join(base_dir, "vectors")
-    decisions_dir = os.path.join(base_dir, "decisions")
-    src_dir = os.path.join(base_dir, "arrivals")
-
-    seed = _emb_catalog_seed(emb).localCheckpoint()
-    # The two seed writes and the arrival write are independent jobs —
-    # overlap (r19 §2.6). _emb_code_rows eagerly checkpoints its code
-    # derivation before the pool, so the thunks only write.
-    code_rows = _emb_code_rows(seed)
-    _run_jobs(
-        lambda: _seed_state(code_rows, codes_dir),
-        lambda: _seed_state(seed.select("doc_id", "embedding"), vecs_dir),
-        lambda: _write_id_ordered_arrivals(src_dir, _emb_arrival_parts(emb)),
-    )
-    q = foreach_batch_sink(
-        _arrivals_stream(spark, src_dir, schema=_EMB_ARRIVAL_SCHEMA),
-        _embedding_catalog_handler(
-            codes_dir, vecs_dir, decisions_dir, retention_batches
-        ),
-        checkpoint=os.path.join(base_dir, "ckpt"),
-        mode="append",
-    )
-    q.awaitTermination()
-    return spark.read.parquet(decisions_dir).select(
-        F.col("doc_id").alias("vec_id"), "n_prior_neardups"
-    )
+_EMB_ARM = _Arm(
+    name="embcat",
+    state={"codes": _EMB_CODES_SCHEMA, "vectors": _EMB_VECS_SCHEMA},
+    seeds={
+        "codes": lambda emb: _emb_code_rows(_emb_catalog_seed(emb)),
+        "vectors": _emb_catalog_seed,
+    },
+    load=_emb_table,
+    arrival_schema=_EMB_ARRIVAL_SCHEMA,
+    parts=_emb_arrival_parts,
+    decide=_emb_decide,
+    out=("doc_id AS vec_id", "n_prior_neardups"),
+)
 
 
 @register("stream_embedding_catalog_compacted", STREAM_EMB_CATALOG_ORACLE)
@@ -4317,71 +4066,12 @@ def stream_embedding_catalog_compacted(
     partition between the two arrival phases. Registers against
     STREAM_EMB_CATALOG_ORACLE VERBATIM: the driver hash proves a
     phase-B copy of a phase-A vector is still counted through the
-    collapse. Bespoke two-phase body (seedful but TWO-relation — the
-    shared _compacted_two_phase_ingest seeds exactly one state dir),
-    same phase structure as the cluster-map compaction."""
-    from ..streaming.sinks import foreach_batch_sink
-
-    from . import tmp_run_dir
-
-    emb = _emb_table(spark, sf_dir)
-    base_dir = tmp_run_dir("embcompact_")
-    parts = _emb_arrival_parts(emb)
-    dirs = {
-        f"{kind}_{ph}": os.path.join(base_dir, f"{kind}_{ph}")
-        for kind in ("codes", "vectors", "decisions")
-        for ph in ("a", "b")
-    }
-    seed = _emb_catalog_seed(emb).localCheckpoint()
-    _seed_state(_emb_code_rows(seed), dirs["codes_a"])
-    _seed_state(seed.select("doc_id", "embedding"), dirs["vectors_a"])
-
-    _write_id_ordered_arrivals(os.path.join(base_dir, "arr_a"), parts[:2])
-    q = foreach_batch_sink(
-        _arrivals_stream(
-            spark, os.path.join(base_dir, "arr_a"), schema=_EMB_ARRIVAL_SCHEMA
-        ),
-        _embedding_catalog_handler(
-            dirs["codes_a"], dirs["vectors_a"], dirs["decisions_a"],
-            retention_batches=None,
-        ),
-        checkpoint=os.path.join(base_dir, "ckpt_a"),
-        mode="append",
-    )
-    q.awaitTermination()
-
-    # The two relations compact independently — overlap (r19 §2.6).
-    _run_jobs(
-        lambda: _compact_state(
-            spark, dirs["codes_a"], dirs["codes_b"], schema=_EMB_CODES_SCHEMA
-        ),
-        lambda: _compact_state(
-            spark, dirs["vectors_a"], dirs["vectors_b"],
-            schema=_EMB_VECS_SCHEMA,
-        ),
-    )
-
-    _write_id_ordered_arrivals(os.path.join(base_dir, "arr_b"), parts[2:])
-    q = foreach_batch_sink(
-        _arrivals_stream(
-            spark, os.path.join(base_dir, "arr_b"), schema=_EMB_ARRIVAL_SCHEMA
-        ),
-        _embedding_catalog_handler(
-            dirs["codes_b"], dirs["vectors_b"], dirs["decisions_b"],
-            retention_batches=None,
-        ),
-        checkpoint=os.path.join(base_dir, "ckpt_b"),
-        mode="append",
-    )
-    q.awaitTermination()
-    return (
-        spark.read.parquet(dirs["decisions_a"])
-        .unionByName(spark.read.parquet(dirs["decisions_b"]))
-        .select(F.col("doc_id").alias("vec_id"), "n_prior_neardups")
-    )
+    collapse."""
+    return _run_arm(spark, sf_dir, _EMB_ARM, compact=True)
 
 
 _EMBCAT_TTL_W = 2
+_EMB_TTL_ARM = replace(_EMB_ARM, name="embttl", ttl=_EMBCAT_TTL_W)
 
 STREAM_EMB_CATALOG_RETENTION_ORACLE = f"""
     WITH vcorpus AS (
@@ -4439,9 +4129,7 @@ def stream_embedding_catalog_retention(
     and the +plant re-crawls of seeded (even) vectors stop being
     counted once the seed is out of window (expiry pinned by
     test_embedding_catalog_retention_expires)."""
-    return _embedding_catalog_run(
-        spark, sf_dir, "embttl_", retention_batches=_EMBCAT_TTL_W
-    )
+    return _run_arm(spark, sf_dir, _EMB_TTL_ARM)
 
 
 # ---------------------------------------------------------------------------
@@ -4545,108 +4233,70 @@ PRETRAIN_GATE_V2_ORACLE = f"""
     """
 
 
-def _gate_v2_handler(
-    store_dir: str,
-    catalog_dir: str,
-    decisions_dir: str,
-    image_catalog_dir: str | None = None,
-):
-    """foreachBatch handler composing the maintenance arms: decide
-    (exact via fp store AS OF batch, near via band catalog AS OF batch,
-    quality projection), then append novel fps AND the batch's band rows.
-    All writes (decisions, store append, catalog appends) are
-    dynamic-overwrite batch partitions. ``image_catalog_dir`` (r18, the
-    r17 VERDICT task 4) composes the MAINTAINED image modality in: the
-    batch's cover chunks probe the growing chunk catalog
-    (_image_catalog_prior_hits, batch_id < current) and then append —
-    the default None keeps the v2 twin's decisions byte-identical (the
-    null img_hit column never matches a CASE arm)."""
+def _gate_decide(
+    batch_df: DataFrame, batch_id: int, visible, image_arm: bool
+) -> dict:
+    """Compose the maintenance arms: decide (exact via the visible fp
+    store, near via the visible band catalog, quality projection; with
+    ``image_arm`` also near-image via the cover chunk catalog), then
+    append novel fps and the batch's band rows (and cover chunks).
+    Without the image arm the null img_hit column never matches a CASE
+    arm, so v2's decisions are v3's minus that reason."""
     from ..functions.text import fingerprint
     from .textprep import quality_p_col
 
-    def handler(batch_df: DataFrame, batch_id: int) -> None:
-        scored = batch_df.select(
-            "doc_id",
-            "text",
-            fingerprint("text").alias("fp"),
-            quality_p_col().alias("quality_p"),
-        ).localCheckpoint()  # one derivation feeds all arms + all appends
-        ranked = _fp_store_ranked(
-            store_dir, scored.select("doc_id", "fp", "quality_p"), batch_id
-        )
-        # The band derivation and the cover-image chunk derivation are
-        # independent eager materializations off the one checkpointed
-        # scored relation — overlap them (r19, guide §2.6).
-        derive = [lambda: _batch_band_rows(scored)]
-        if image_catalog_dir is not None:
-            derive.append(lambda: _image_chunk_rows(_gate_cover(scored)))
-        derived = _run_jobs(*derive)
-        bands = derived[0]
-        near = (
-            _catalog_prior_hits(catalog_dir, bands, batch_id)
+    scored = batch_df.select(
+        "doc_id",
+        "text",
+        fingerprint("text").alias("fp"),
+        quality_p_col().alias("quality_p"),
+    ).localCheckpoint()  # one derivation feeds all arms + all appends
+    ranked = _fp_store_ranked(
+        scored.select("doc_id", "fp", "quality_p"), visible("store")
+    )
+    # The band derivation and the cover-image chunk derivation are
+    # independent eager materializations off the one checkpointed
+    # scored relation — overlap them.
+    derive = [lambda: _batch_band_rows(scored)]
+    if image_arm:
+        derive.append(lambda: _image_chunk_rows(_gate_cover(scored)))
+    bands, *chunks = _run_jobs(*derive)
+    near = (
+        _catalog_prior_hits(bands, visible("catalog"))
+        .select("doc_id")
+        .distinct()
+        .withColumn("near_hit", F.lit(True))
+    )
+    joined = ranked.join(near, "doc_id", "left_outer")
+    if image_arm:
+        imghit = (
+            _image_catalog_prior_hits(chunks[0], visible("imgcatalog"))
             .select("doc_id")
             .distinct()
-            .withColumn("near_hit", F.lit(True))
+            .withColumn("img_hit", F.lit(True))
         )
-        joined = ranked.join(near, "doc_id", "left_outer")
-        if image_catalog_dir is not None:
-            chunks = derived[1]
-            imghit = (
-                _image_catalog_prior_hits(
-                    image_catalog_dir, chunks, batch_id
-                )
-                .select("doc_id")
-                .distinct()
-                .withColumn("img_hit", F.lit(True))
-            )
-            joined = joined.join(imghit, "doc_id", "left_outer")
-        else:
-            joined = joined.withColumn(
-                "img_hit", F.lit(None).cast("boolean")
-            )
-        reason = (
-            F.when(F.col("hit") | (F.col("rn") > 1), "exact_dup")
-            .when(F.col("near_hit"), "near_dup")
-            .when(F.col("img_hit"), "near_dup_image")
-            .when(F.col("quality_p") < _GATE_QUALITY_LT, "low_quality")
-            .otherwise("ok")
-        )
-        # All state writes are independent (own dirs, replay overwrites
-        # per-partition) — overlap them (r19, guide §2.6): the decisions
-        # write is the slow one (every probe arm in its lineage) and the
-        # three appends backfill its tail.
-        writes = [
-            lambda: _overwrite_batch_partition(
-                joined
-                .select("doc_id", reason.alias("reason"))
-                .select(
-                    "doc_id",
-                    F.when(F.col("reason") == "ok", "keep")
-                    .otherwise("drop")
-                    .alias("decision"),
-                    "reason",
-                ),
-                decisions_dir,
-                batch_id,
-            ),
-            lambda: _overwrite_batch_partition(
-                ranked.filter(
-                    F.col("hit").isNull() & (F.col("rn") == 1)
-                ).select("fp"),
-                store_dir,
-                batch_id,
-            ),
-            lambda: _overwrite_batch_partition(bands, catalog_dir, batch_id),
-        ]
-        if image_catalog_dir is not None:
-            writes.append(
-                lambda: _overwrite_batch_partition(
-                    chunks, image_catalog_dir, batch_id
-                )
-            )
-        _run_jobs(*writes)
-
-    return handler
+        joined = joined.join(imghit, "doc_id", "left_outer")
+    else:
+        joined = joined.withColumn("img_hit", F.lit(None).cast("boolean"))
+    reason = (
+        F.when(_is_dup(), "exact_dup")
+        .when(F.col("near_hit"), "near_dup")
+        .when(F.col("img_hit"), "near_dup_image")
+        .when(F.col("quality_p") < _GATE_QUALITY_LT, "low_quality")
+        .otherwise("ok")
+    )
+    return {
+        "decisions": joined.select("doc_id", reason.alias("reason")).select(
+            "doc_id",
+            F.when(F.col("reason") == "ok", "keep")
+            .otherwise("drop")
+            .alias("decision"),
+            "reason",
+        ),
+        "store": ranked.filter(_is_novel()).select("fp"),
+        "catalog": bands,
+        **({"imgcatalog": chunks[0]} if image_arm else {}),
+    }
 
 
 @register("stream_pretrain_gate_v2", PRETRAIN_GATE_V2_ORACLE)
@@ -4658,51 +4308,12 @@ def stream_pretrain_gate_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     near_dup > low_quality > ok). The +_GV2_CROSS_OFF / +_GV2_NEAR_OFF
     plants arrive in the LAST file and are caught purely by state earlier
     micro-batches appended — the freshness v1's frozen catalog lacks."""
-    return _gate_maintained_run(spark, sf_dir, "gatev2_", image_arm=False)
+    return _run_arm(spark, sf_dir, _GATE_V2_ARM)
 
 
-def _gate_maintained_run(
-    spark: SparkSession, sf_dir: str, prefix: str, image_arm: bool
-) -> DataFrame:
-    """Seed the maintained stores, write the plant-bearing id-ordered
-    arrivals, stream them through the composed gate handler, return the
-    drained decisions — the one run body shared by the v2 (text-only)
-    and v3 (+maintained image catalog) gates (r18: factored so the image
-    arm extends via the parameter, never a copy)."""
-    from ..streaming.sinks import foreach_batch_sink
-
-    from . import tmp_run_dir
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    base_dir = tmp_run_dir(prefix)
-    store_dir = os.path.join(base_dir, "store")
-    catalog_dir = os.path.join(base_dir, "catalog")
-    decisions_dir = os.path.join(base_dir, "decisions")
-    src_dir = os.path.join(base_dir, "arrivals")
-    image_catalog_dir = (
-        os.path.join(base_dir, "imgcatalog") if image_arm else None
-    )
-
-    # Seeds are the shared ingest-arm builders (the CLAUDE.md seed rule):
-    # the fp seed is _fp_store_seed verbatim; _mh_catalog_seed's
-    # < _MH_PLANT_OFFSET filter is vacuous here (the guard below bounds
-    # every real id far under it), so the band seed is the plain evens
-    # too; the image seed is the evens' COVER chunks (the v1 gate's
-    # prefix-stable cover derivation over the maintained-catalog chunker).
-    seed_writes = [
-        lambda: _seed_state(_fp_store_seed(docs), store_dir),
-        lambda: _seed_state(_mh_catalog_seed(docs), catalog_dir),
-    ]
-    if image_arm:
-        seed_writes.append(
-            lambda: _seed_state(
-                _image_chunk_rows(
-                    _gate_cover(docs.filter(F.col("doc_id") % 2 == 0))
-                ),
-                image_catalog_dir,
-            )
-        )
-
+def _gate_arrival_parts(docs: DataFrame, image_arm: bool) -> list:
+    """The gate arrivals: odd ids in 3 id ranges + one file holding every
+    plant family (v3 adds the cover-stable tail-scrambles)."""
     # The plant families share one arrivals file, so their id ranges
     # must be DISJOINT (a collision would give two arrivals one doc_id —
     # the oracle's quality join would fan out where the handler emits
@@ -4756,28 +4367,33 @@ def _gate_maintained_run(
             )
         )
     odds = docs.filter(F.col("doc_id") % 2 == 1)
-    # Seeds and arrivals are independent jobs — overlap (r19 §2.6); the
-    # guard above already raised before any of them starts.
-    _run_jobs(
-        *seed_writes,
-        lambda: _write_id_ordered_arrivals(
-            src_dir,
-            _id_range_parts(odds, plants, plant_offset=_GV2_SEED_OFF),
-        ),
+    return _id_range_parts(odds, plants, plant_offset=_GV2_SEED_OFF)
+
+
+def _gate_arm(image_arm: bool) -> _Arm:
+    """Seeds are the shared ingest-arm builders: the fp seed is
+    _fp_store_seed verbatim; _mh_catalog_seed's < _MH_PLANT_OFFSET filter
+    is vacuous here (the disjoint-range guard bounds every real id far
+    under it); the image seed is the evens' COVER chunks."""
+    state = {"store": _FP_STORE_SCHEMA, "catalog": _MH_CATALOG_SCHEMA}
+    seeds = {"store": _fp_store_seed, "catalog": _mh_catalog_seed}
+    if image_arm:
+        state["imgcatalog"] = _IMG_CATALOG_SCHEMA
+        seeds["imgcatalog"] = lambda docs: _image_chunk_rows(
+            _gate_cover(docs.filter(F.col("doc_id") % 2 == 0))
+        )
+    return _Arm(
+        name="gatev3" if image_arm else "gatev2",
+        state=state,
+        seeds=seeds,
+        parts=partial(_gate_arrival_parts, image_arm=image_arm),
+        decide=partial(_gate_decide, image_arm=image_arm),
+        out=("doc_id", "decision", "reason"),
     )
 
-    q = foreach_batch_sink(
-        _arrivals_stream(spark, src_dir),
-        _gate_v2_handler(
-            store_dir, catalog_dir, decisions_dir, image_catalog_dir
-        ),
-        checkpoint=os.path.join(base_dir, "ckpt"),
-        mode="append",
-    )
-    q.awaitTermination()
-    return spark.read.parquet(decisions_dir).select(
-        "doc_id", "decision", "reason"
-    )
+
+_GATE_V2_ARM = _gate_arm(image_arm=False)
+_GATE_V3_ARM = _gate_arm(image_arm=True)
 
 
 # ---------------------------------------------------------------------------
@@ -4913,7 +4529,7 @@ def stream_pretrain_gate_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     ARRIVING odd docs are caught purely by chunk rows previous
     micro-batches appended — the image freshness v1's frozen catalog and
     v2's missing image arm both lack."""
-    return _gate_maintained_run(spark, sf_dir, "gatev3_", image_arm=True)
+    return _run_arm(spark, sf_dir, _GATE_V3_ARM)
 
 
 # ---------------------------------------------------------------------------
@@ -5002,119 +4618,92 @@ SPLIT_BY_NEARDUP_INC_ORACLE = f"""
     """
 
 
-def _neardup_clustermap_handler(
-    catalog_dir: str, map_dir: str, decisions_dir: str
-):
-    """foreachBatch handler maintaining the incremental cluster map:
-    band the batch, pick each doc's earliest band-sharing prior as its
-    parent, resolve representatives (map join for prior-batch parents;
-    bounded pointer-chasing for same-batch chains), gate the split on
-    the rep's fingerprint, then append the batch's map rows AND band
-    rows. All three writes are dynamic-overwrite batch partitions —
-    exactly-once on replay (reads bounded batch_id < current)."""
+def _ndinc_decide(batch_df: DataFrame, batch_id: int, visible) -> dict:
+    """Maintain the incremental cluster map: band the batch, pick each
+    doc's earliest band-sharing prior as its parent, resolve
+    representatives (map join for prior-batch parents; bounded
+    pointer-chasing for same-batch chains), gate the split on the rep's
+    fingerprint, then append the batch's map rows AND band rows. The
+    decisions carry rep_id too, so the leakage audit reads one relation."""
     from ..functions.text import fingerprint
 
-    def handler(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        scored = batch_df.select(
-            "doc_id", "text", fingerprint("text").alias("fp")
-        ).localCheckpoint()
-        bands = _batch_band_rows(scored)
-        if os.path.isdir(catalog_dir):  # absent only before batch 0
-            hits = _catalog_prior_hits(catalog_dir, bands, batch_id)
-        else:  # seedless first batch probes within itself alone
-            hits = _within_batch_band_hits(bands)
-        par = hits.groupBy("doc_id").agg(F.min("prior_id").alias("parent"))
-        base = scored.select("doc_id", "fp").join(par, "doc_id", "left_outer")
-        if os.path.isdir(map_dir):
-            repmap = (
-                _read_state(spark, map_dir, _CLUSTER_MAP_SCHEMA)
-                .filter(F.col("batch_id") < batch_id)
-                .select(
-                    F.col("doc_id").alias("parent"), "rep_id", "rep_fp"
-                )
-            )
-            base = base.join(repmap, "parent", "left_outer")
-        else:
-            base = base.withColumn(
-                "rep_id", F.lit(None).cast("long")
-            ).withColumn("rep_fp", F.lit(None).cast("string"))
-        base = base.localCheckpoint()  # one derivation feeds both arms
+    scored = batch_df.select(
+        "doc_id", "text", fingerprint("text").alias("fp")
+    ).localCheckpoint()
+    bands = _batch_band_rows(scored)
+    hits = _catalog_prior_hits(bands, visible("catalog"))
+    par = hits.groupBy("doc_id").agg(F.min("prior_id").alias("parent"))
+    base = scored.select("doc_id", "fp").join(par, "doc_id", "left_outer")
+    repmap = visible("clustermap")
+    if repmap is not None:
+        base = base.join(
+            repmap.select(F.col("doc_id").alias("parent"), "rep_id", "rep_fp"),
+            "parent",
+            "left_outer",
+        )
+    else:  # seedless first batch: no prior map rows
+        base = base.withColumn(
+            "rep_id", F.lit(None).cast("long")
+        ).withColumn("rep_fp", F.lit(None).cast("string"))
+    base = base.localCheckpoint()  # one derivation feeds both arms
 
-        # Founding docs (no parent) rep themselves; prior-batch parents
-        # carry their map row. Same-batch parents (rep still null) chase
-        # the strictly-decreasing parent chain against the growing
-        # resolved set — depth-bounded, so the loop terminates.
-        # r19 loop shape: ONE eager materialization per hop — a single
-        # left-outer pass splits the pending set into rows whose ancestor
-        # just resolved (rep_id non-null; resolved reps are always
-        # non-null by construction) and rows that advance one hop
-        # (par_b's inner/outer distinction is immaterial: every same-
-        # batch ancestor is in base, and an unresolved ancestor always
-        # has a parent, else it would be a founder and resolved).
-        # resolved stays a LAZY union over checkpointed pieces, so the
-        # old shape's two extra jobs per hop (pending checkpoint +
-        # eager resolved-union checkpoint) are gone; results are
-        # identical — the same (doc_id, rep) pairs resolve at the same
-        # hop, only the materialization boundaries moved.
-        resolved = base.filter(
-            F.col("parent").isNull() | F.col("rep_id").isNotNull()
-        ).select(
+    # Founding docs (no parent) rep themselves; prior-batch parents
+    # carry their map row. Same-batch parents (rep still null) chase
+    # the strictly-decreasing parent chain against the growing
+    # resolved set — depth-bounded, so the loop terminates. ONE eager
+    # materialization per hop: a single left-outer pass splits the
+    # pending set into rows whose ancestor just resolved (resolved reps
+    # are always non-null by construction) and rows that advance one hop
+    # (every same-batch ancestor is in base, and an unresolved ancestor
+    # always has a parent, else it would be a founder and resolved).
+    # resolved stays a LAZY union over checkpointed pieces.
+    resolved = base.filter(
+        F.col("parent").isNull() | F.col("rep_id").isNotNull()
+    ).select(
+        "doc_id",
+        F.coalesce(F.col("rep_id"), F.col("doc_id")).alias("rep_id"),
+        F.coalesce(F.col("rep_fp"), F.col("fp")).alias("rep_fp"),
+    )
+    pending = base.filter(
+        F.col("parent").isNotNull() & F.col("rep_id").isNull()
+    ).select("doc_id", F.col("parent").alias("anc"))
+    par_b = base.select(
+        F.col("doc_id").alias("anc"), F.col("parent").alias("anc2")
+    )
+    for _ in range(1000):  # anti-hang bound far above any real depth
+        if pending.isEmpty():
+            break
+        res_anc = resolved.select(
+            F.col("doc_id").alias("anc"), "rep_id", "rep_fp"
+        )
+        step = (
+            pending.join(res_anc, "anc", "left_outer")
+            .join(par_b, "anc", "left_outer")
+            .select("doc_id", "rep_id", "rep_fp", "anc2")
+            .localCheckpoint()
+        )
+        resolved = resolved.unionByName(
+            step.filter(F.col("rep_id").isNotNull()).select(
+                "doc_id", "rep_id", "rep_fp"
+            )
+        )
+        pending = step.filter(F.col("rep_id").isNull()).select(
+            "doc_id", F.col("anc2").alias("anc")
+        )
+    else:
+        raise RuntimeError(
+            "_ndinc_decide: parent chain did not resolve — "
+            "strictly-decreasing ids make this unreachable"
+        )
+    return {
+        "decisions": resolved.select(
             "doc_id",
-            F.coalesce(F.col("rep_id"), F.col("doc_id")).alias("rep_id"),
-            F.coalesce(F.col("rep_fp"), F.col("fp")).alias("rep_fp"),
-        )
-        pending = base.filter(
-            F.col("parent").isNotNull() & F.col("rep_id").isNull()
-        ).select("doc_id", F.col("parent").alias("anc"))
-        par_b = base.select(
-            F.col("doc_id").alias("anc"), F.col("parent").alias("anc2")
-        )
-        for _ in range(1000):  # anti-hang bound far above any real depth
-            if pending.isEmpty():
-                break
-            res_anc = resolved.select(
-                F.col("doc_id").alias("anc"), "rep_id", "rep_fp"
-            )
-            step = (
-                pending.join(res_anc, "anc", "left_outer")
-                .join(par_b, "anc", "left_outer")
-                .select("doc_id", "rep_id", "rep_fp", "anc2")
-                .localCheckpoint()
-            )
-            resolved = resolved.unionByName(
-                step.filter(F.col("rep_id").isNotNull()).select(
-                    "doc_id", "rep_id", "rep_fp"
-                )
-            )
-            pending = step.filter(F.col("rep_id").isNull()).select(
-                "doc_id", F.col("anc2").alias("anc")
-            )
-        else:
-            raise RuntimeError(
-                "_neardup_clustermap_handler: parent chain did not "
-                "resolve — strictly-decreasing ids make this unreachable"
-            )
-
-        # Independent writes (own dirs) — overlap them (r19, guide §2.6).
-        _run_jobs(
-            lambda: _overwrite_batch_partition(
-                resolved.select(
-                    "doc_id",
-                    cluster_split_column(F.col("rep_fp")).alias("split"),
-                ),
-                decisions_dir,
-                batch_id,
-            ),
-            lambda: _overwrite_batch_partition(
-                resolved.select("doc_id", "rep_id", "rep_fp"),
-                map_dir,
-                batch_id,
-            ),
-            lambda: _overwrite_batch_partition(bands, catalog_dir, batch_id),
-        )
-
-    return handler
+            cluster_split_column(F.col("rep_fp")).alias("split"),
+            "rep_id",
+        ),
+        "catalog": bands,
+        "clustermap": resolved.select("doc_id", "rep_id", "rep_fp"),
+    }
 
 
 @register("stream_split_by_neardup_incremental", SPLIT_BY_NEARDUP_INC_ORACLE)
@@ -5128,39 +4717,22 @@ def stream_split_by_neardup_incremental(
     fingerprint, so a near-dup pair whose members BOTH arrive after
     stream start, in different micro-batches, still lands in one split
     (pinned by test_stream_split_by_neardup_incremental_cross_batch)."""
-    decisions_dir, _map_dir = _ndinc_run(spark, sf_dir, "ndinc_")
-    return spark.read.parquet(decisions_dir).select("doc_id", "split")
+    return _run_arm(spark, sf_dir, _NDINC_ARM)
 
 
-def _ndinc_run(
-    spark: SparkSession, sf_dir: str, prefix: str
-) -> tuple[str, str]:
-    """Stream the near corpus (id-ordered) through the cluster-map
-    handler; return (decisions_dir, map_dir) — the one ingest body
-    shared by the assignment registration and the leakage audit."""
-    from ..streaming.sinks import foreach_batch_sink
-
-    from . import tmp_run_dir
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    base_dir = tmp_run_dir(prefix)
-    catalog_dir = os.path.join(base_dir, "catalog")
-    map_dir = os.path.join(base_dir, "clustermap")
-    decisions_dir = os.path.join(base_dir, "decisions")
-    src_dir = os.path.join(base_dir, "arrivals")
-
-    _write_id_ordered_arrivals(
-        src_dir,
-        _id_range_parts(docs, near_plants(docs), plant_offset=100000),
-    )
-    q = foreach_batch_sink(
-        _arrivals_stream(spark, src_dir),
-        _neardup_clustermap_handler(catalog_dir, map_dir, decisions_dir),
-        checkpoint=os.path.join(base_dir, "ckpt"),
-        mode="append",
-    )
-    q.awaitTermination()
-    return decisions_dir, map_dir
+# Seedless and two-relation. No TTL twin BY DESIGN (expires=False):
+# expiring rep-map rows orphans cluster members mid-cluster — a retention
+# story for cluster maps is re-clustering, not row expiry.
+_NDINC_ARM = _Arm(
+    name="ndinc",
+    state={"catalog": _MH_CATALOG_SCHEMA, "clustermap": _CLUSTER_MAP_SCHEMA},
+    parts=lambda docs: _id_range_parts(
+        docs, near_plants(docs), plant_offset=100000
+    ),
+    decide=_ndinc_decide,
+    out=("doc_id", "split"),
+    expires=False,
+)
 
 
 @register(
@@ -5198,18 +4770,11 @@ def stream_split_by_neardup_inc_audit(
     proves it against the recursive-chain oracle's replay. The cluster
     key is the maintained map's rep_id (founders rep themselves), the
     split_by_neardup_cluster_audit convention over at-ingest state."""
-    decisions_dir, map_dir = _ndinc_run(spark, sf_dir, "ndincaudit_")
-    sp = (
-        spark.read.parquet(decisions_dir)
-        .select("doc_id", "split")
-        .join(
-            spark.read.parquet(map_dir).select(
-                "doc_id", F.col("rep_id").alias("cluster_id")
-            ),
-            "doc_id",
-        )
-        .localCheckpoint(eager=False)  # feeds train-cluster set + eval side
-    )
+    sp = _run_arm(
+        spark,
+        sf_dir,
+        replace(_NDINC_ARM, out=("doc_id", "split", "rep_id AS cluster_id")),
+    ).localCheckpoint(eager=False)  # feeds train-cluster set + eval side
     tc = (
         sp.filter(F.col("split") == "train")
         .select("cluster_id")
@@ -5243,62 +4808,8 @@ def stream_split_by_neardup_inc_compacted(
     holds for each) collapse to one batch_id=-1 partition between the
     two arrival phases. Registers against SPLIT_BY_NEARDUP_INC_ORACLE
     VERBATIM: the driver hash proves a phase-B arrival still adopts a
-    phase-A rep through the collapse. Bespoke two-phase body rather
-    than _compacted_two_phase_ingest because this state is SEEDLESS and
-    two-relation (that body seeds exactly one state dir); the phase
-    structure — ingest parts[:2], compact, ingest parts[2:] against the
-    compacted dirs, union both decisions — is the same."""
-    from ..streaming.sinks import foreach_batch_sink
-
-    from . import tmp_run_dir
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    base_dir = tmp_run_dir("ndinccomp_")
-    parts = _id_range_parts(docs, near_plants(docs), plant_offset=100000)
-
-    dirs = {
-        f"{kind}_{ph}": os.path.join(base_dir, f"{kind}_{ph}")
-        for kind in ("catalog", "clustermap", "decisions")
-        for ph in ("a", "b")
-    }
-    _write_id_ordered_arrivals(os.path.join(base_dir, "arr_a"), parts[:2])
-    q = foreach_batch_sink(
-        _arrivals_stream(spark, os.path.join(base_dir, "arr_a")),
-        _neardup_clustermap_handler(
-            dirs["catalog_a"], dirs["clustermap_a"], dirs["decisions_a"]
-        ),
-        checkpoint=os.path.join(base_dir, "ckpt_a"),
-        mode="append",
-    )
-    q.awaitTermination()
-
-    # The two relations compact independently — overlap (r19 §2.6).
-    _run_jobs(
-        lambda: _compact_state(
-            spark, dirs["catalog_a"], dirs["catalog_b"],
-            schema=_MH_CATALOG_SCHEMA,
-        ),
-        lambda: _compact_state(
-            spark, dirs["clustermap_a"], dirs["clustermap_b"],
-            schema=_CLUSTER_MAP_SCHEMA,
-        ),
-    )
-
-    _write_id_ordered_arrivals(os.path.join(base_dir, "arr_b"), parts[2:])
-    q = foreach_batch_sink(
-        _arrivals_stream(spark, os.path.join(base_dir, "arr_b")),
-        _neardup_clustermap_handler(
-            dirs["catalog_b"], dirs["clustermap_b"], dirs["decisions_b"]
-        ),
-        checkpoint=os.path.join(base_dir, "ckpt_b"),
-        mode="append",
-    )
-    q.awaitTermination()
-    return (
-        spark.read.parquet(dirs["decisions_a"])
-        .unionByName(spark.read.parquet(dirs["decisions_b"]))
-        .select("doc_id", "split")
-    )
+    phase-A rep through the collapse."""
+    return _run_arm(spark, sf_dir, _NDINC_ARM, compact=True)
 
 
 # ---------------------------------------------------------------------------

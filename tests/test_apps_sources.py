@@ -235,3 +235,19 @@ def test_orc_and_json_roundtrip(spark, sf_dir, tmp_path):
     docs.write.json(json_dir)
     back = spark.read.schema(docs.schema).json(json_dir)
     assert {tuple(r) for r in back.collect()} == expect
+
+
+def test_default_driver_memory_fits_host(monkeypatch):
+    """Without SPARK_DRIVER_MEMORY the driver heap is half of physical
+    RAM, capped at 16g — never a fixed 16g on a smaller host."""
+    from spark_streaming_kafka_example_spark import engine
+
+    page = 4096
+    for ram_gb, want in [(15, "7680m"), (64, "16384m"), (1, "1024m")]:
+        pages = ram_gb * 2**30 // page
+        monkeypatch.setattr(
+            engine.os,
+            "sysconf",
+            lambda key, pages=pages: page if key == "SC_PAGE_SIZE" else pages,
+        )
+        assert engine._default_driver_memory() == want, ram_gb

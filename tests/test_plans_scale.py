@@ -661,6 +661,12 @@ def test_centroid_literal_array_rejects_unbounded(spark):
     assert spark.range(1).select(arr.alias("a")).first()["a"][0]["cent_id"] == 0
     with pytest.raises(ValueError, match="fixed-k"):
         _centroid_literal_array(rows, k=2)
+    # non-finite values would render as nanD/infD (unparseable SQL)
+    for bad in (float("nan"), float("inf"), float("-inf")):
+        with pytest.raises(ValueError, match="finite"):
+            _centroid_literal_array(
+                rows[:2] + [{"cent_id": 2, "cv": [0.1, bad]}], k=3
+            )
 
 
 def test_stride_centroids_bounded_at_any_corpus_size(spark):
@@ -1141,7 +1147,9 @@ def test_ttl_store_read_pruned_both_sides(spark, tmp_path):
     import pyspark.sql.functions as SF
 
     from spark_streaming_kafka_example_spark.plans.stream import (
+        _FP_TTL_ARM,
         _fp_store_ranked,
+        _visible,
     )
 
     store = str(tmp_path / "store")
@@ -1151,7 +1159,9 @@ def test_ttl_store_read_pruned_both_sides(spark, tmp_path):
         ).write.mode("append").partitionBy("batch_id").parquet(store)
 
     fps = spark.createDataFrame([(1, "f0")], "doc_id long, fp string")
-    ranked = _fp_store_ranked(store, fps, batch_id=3, retention_batches=2)
+    assert _FP_TTL_ARM.ttl == 2
+    visible = _visible(spark, _FP_TTL_ARM, str(tmp_path), batch_id=3)
+    ranked = _fp_store_ranked(fps, visible("store"))
     plan = ranked._jdf.queryExecution().executedPlan().toString()
     scans = [
         ln for ln in plan.splitlines()
@@ -1175,8 +1185,10 @@ def test_ttl_image_catalog_read_pruned_both_sides(spark, tmp_path):
     import pyspark.sql.functions as SF
 
     from spark_streaming_kafka_example_spark.plans.stream import (
+        _IMG_TTL_ARM,
         _image_catalog_prior_hits,
         _image_chunk_rows,
+        _visible,
     )
 
     catalog = str(tmp_path / "catalog")
@@ -1191,9 +1203,9 @@ def test_ttl_image_catalog_read_pruned_both_sides(spark, tmp_path):
     chunks = _image_chunk_rows(
         spark.createDataFrame([(99, "probe text arriving now")], schema)
     )
-    hits = _image_catalog_prior_hits(
-        catalog, chunks, batch_id=3, retention_batches=2
-    )
+    assert _IMG_TTL_ARM.ttl == 2
+    visible = _visible(spark, _IMG_TTL_ARM, str(tmp_path), batch_id=3)
+    hits = _image_catalog_prior_hits(chunks, visible("catalog"))
     plan = hits._jdf.queryExecution().executedPlan().toString()
     scans = [
         ln for ln in plan.splitlines()
@@ -1218,8 +1230,9 @@ def test_ttl_embedding_catalog_read_pruned_both_sides(spark, tmp_path):
     import pyspark.sql.functions as SF
 
     from spark_streaming_kafka_example_spark.plans.stream import (
+        _EMB_TTL_ARM,
         _emb_code_rows,
-        _emb_prior_relations,
+        _visible,
     )
 
     codes = str(tmp_path / "codes")
@@ -1236,9 +1249,9 @@ def test_ttl_embedding_catalog_read_pruned_both_sides(spark, tmp_path):
             "append"
         ).partitionBy("batch_id").parquet(vecs)
 
-    prior_codes, prior_store = _emb_prior_relations(
-        spark, codes, vecs, batch_id=3, retention_batches=2
-    )
+    assert _EMB_TTL_ARM.ttl == 2
+    visible = _visible(spark, _EMB_TTL_ARM, str(tmp_path), batch_id=3)
+    prior_codes, prior_store = visible("codes"), visible("vectors")
     for rel, path_word in ((prior_codes, "codes"), (prior_store, "vectors")):
         # each relation's plan holds exactly one FileScan (its own state
         # dir); the location string truncates under pytest's long tmp

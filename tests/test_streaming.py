@@ -1608,7 +1608,8 @@ def test_dedup_store_cross_batch_maintenance(spark, tmp_path):
 
     from spark_streaming_kafka_example_spark.functions.text import fingerprint
     from spark_streaming_kafka_example_spark.plans.stream import (
-        _dedup_store_handler,
+        _FP_ARM,
+        _arm_handler,
     )
     from spark_streaming_kafka_example_spark.streaming.sinks import (
         foreach_batch_sink,
@@ -1646,7 +1647,7 @@ def test_dedup_store_cross_batch_maintenance(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src + "/*")
     )
-    handler = _dedup_store_handler(store, decisions)
+    handler = _arm_handler(_FP_ARM, str(tmp_path))
     q = foreach_batch_sink(
         arriving, handler, checkpoint=str(tmp_path / "ckpt"), mode="append"
     )
@@ -1683,7 +1684,8 @@ def test_minhash_catalog_cross_batch_growth(spark, tmp_path):
 
     from spark_streaming_kafka_example_spark.operators import dedup as DD
     from spark_streaming_kafka_example_spark.plans.stream import (
-        _mh_catalog_handler,
+        _MH_ARM,
+        _arm_handler,
     )
     from spark_streaming_kafka_example_spark.streaming.sinks import (
         foreach_batch_sink,
@@ -1723,7 +1725,7 @@ def test_minhash_catalog_cross_batch_growth(spark, tmp_path):
                     (1_700_000_000 + i, 1_700_000_000 + i),
                 )
 
-    handler = _mh_catalog_handler(catalog, decisions)
+    handler = _arm_handler(_MH_ARM, str(tmp_path))
     q = foreach_batch_sink(
         (
             spark.readStream.schema(schema)
@@ -1753,67 +1755,118 @@ def test_minhash_catalog_cross_batch_growth(spark, tmp_path):
     assert got2 == got
 
 
+def _every_arm():
+    """Every maintained-state arm spec, TTL twins included (the Bloom arm
+    is built per run, so one instance is built here)."""
+    from spark_streaming_kafka_example_spark.plans import stream as S
+
+    arms = [v for v in vars(S).values() if isinstance(v, S._Arm)]
+    return sorted(arms + [S._fp_bloom_arm()], key=lambda a: a.name)
+
+
+ARMS = _every_arm()
+
+
+@pytest.fixture(scope="module")
+def clean_arm_run(spark, sf_dir, tmp_path_factory):
+    """One clean seed + two batches per arm (the first two arrival parts
+    of the sf arm fixture), cached per module: (root, batches, snapshot)."""
+    from spark_streaming_kafka_example_spark.plans.stream import (
+        _arm_handler,
+        _seed_state,
+    )
+
+    runs = {}
+
+    def run(arm):
+        if arm.name not in runs:
+            root = str(tmp_path_factory.mktemp(arm.name))
+            src = arm.load(spark, sf_dir)
+            for name, build in arm.seeds.items():
+                _seed_state(build(src), os.path.join(root, name))
+            batches = [p.localCheckpoint() for p in arm.parts(src)[:2]]
+            handler = _arm_handler(arm, root)
+            for i, batch in enumerate(batches):
+                handler(batch, i)
+            runs[arm.name] = (root, batches, _arm_snapshot(spark, arm, root))
+        return runs[arm.name]
+
+    return run
+
+
+def _arm_snapshot(spark, arm, root):
+    return {
+        name: sorted(
+            repr(tuple(r))
+            for r in spark.read.parquet(os.path.join(root, name)).collect()
+        )
+        for name in ("decisions", *arm.state)
+    }
+
+
+@pytest.mark.parametrize("arm", ARMS, ids=lambda a: a.name)
 def test_handler_crash_between_overlapped_writes_replays_clean(
-    spark, tmp_path
+    spark, clean_arm_run, tmp_path, arm
 ):
-    """r20 (r19 VERDICT task 8): _run_jobs overlaps a handler's sibling
-    state writes, so a crash can leave ANY SUBSET of them on disk before
-    the engine replays the batch. The invariant that makes this safe —
-    now pinned, not just commented — is that replay is idempotent
+    """The runner overlaps a batch's sibling writes (decisions + every
+    state relation's appends), so a crash can leave ANY SUBSET of them on
+    disk before the engine replays the batch. Replay is idempotent
     regardless of which sibling landed: reads are bounded batch_id <
     current (a half-written current partition is never consulted) and
-    every write is a dynamic per-partition overwrite (the survivor is
-    rewritten byte-identically, the missing sibling is produced). Both
-    crash orders are simulated by deleting one sibling's partition after
-    a clean run and replaying."""
+    every write is a dynamic per-partition overwrite. Each crash order is
+    simulated by deleting one sibling's batch-1 partition from a copy of
+    a clean run and replaying batch 1; state and decisions must come back
+    byte-equal."""
     import shutil
 
-    import pyspark.sql.functions as SF
-
-    from spark_streaming_kafka_example_spark.functions.text import fingerprint
     from spark_streaming_kafka_example_spark.plans.stream import (
-        _dedup_store_handler,
+        _arm_handler,
     )
 
-    store = str(tmp_path / "store")
-    decisions = str(tmp_path / "decisions")
-    schema = "doc_id long, text string"
+    root, batches, clean = clean_arm_run(arm)
+    for name in ("decisions", *arm.state):
+        crashed = str(tmp_path / name)
+        shutil.copytree(root, crashed)
+        shutil.rmtree(os.path.join(crashed, name, "batch_id=1"))
+        _arm_handler(arm, crashed)(batches[1], 1)
+        assert _arm_snapshot(spark, arm, crashed) == clean, name
 
-    spark.createDataFrame([(2, "alpha beta")], schema).select(
-        fingerprint("text").alias("fp")
-    ).withColumn("batch_id", SF.lit(-1)).write.partitionBy("batch_id").parquet(
-        store
+
+@pytest.mark.parametrize("arm", ARMS, ids=lambda a: a.name)
+def test_arm_state_schema_matches_declaration(spark, clean_arm_run, arm):
+    """Each state relation an arm writes, read back with parquet footer
+    inference, has exactly the schema the arm declares — the schema its
+    per-batch reads name instead of inferring."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    root, _, _ = clean_arm_run(arm)
+    for name, declared in arm.state.items():
+        got = spark.read.parquet(os.path.join(root, name)).schema
+        assert (
+            got.simpleString()
+            == _parse_datatype_string(declared).simpleString()
+        ), name
+
+
+def test_drain_fails_a_query_that_never_terminates(spark, monkeypatch):
+    """drain() bounds every wait: a query that never terminates (an
+    unbounded rate source) is stopped at the deadline and reported by
+    name with its last progress, instead of hanging the caller."""
+    import time
+
+    from spark_streaming_kafka_example_spark.plans import stream
+
+    monkeypatch.setattr(stream, "_DRAIN_DEADLINE_S", 3)
+    q = (
+        spark.readStream.format("rate").option("rowsPerSecond", 5).load()
+        .writeStream.format("noop").queryName("drain_never_ends").start()
     )
-
-    batches = [
-        [(11, "gamma delta")],                        # novel
-        [(13, "gamma delta"), (15, "epsilon zeta")],  # cross-batch dup + novel
-    ]
-    handler = _dedup_store_handler(store, decisions)
-    for i, rows in enumerate(batches):
-        handler(spark.createDataFrame(rows, schema), i)
-
-    def snapshot():
-        dec = sorted(
-            (r.doc_id, r.status, r.batch_id)
-            for r in spark.read.parquet(decisions).collect()
-        )
-        fps = sorted(
-            (r.fp, r.batch_id) for r in spark.read.parquet(store).collect()
-        )
-        return dec, fps
-
-    clean = snapshot()
-
-    # crash order (a): batch 1's store append landed, decisions did not
-    shutil.rmtree(os.path.join(decisions, "batch_id=1"))
-    handler(spark.createDataFrame(batches[1], schema), 1)
-    assert snapshot() == clean
-
-    # crash order (b): batch 1's decisions landed, store append did not
-    shutil.rmtree(os.path.join(store, "batch_id=1"))
-    handler(spark.createDataFrame(batches[1], schema), 1)
-    assert snapshot() == clean
+    t0 = time.monotonic()
+    with pytest.raises(TimeoutError, match="drain_never_ends") as err:
+        stream.drain(q)
+    assert time.monotonic() - t0 < 3 + 30
+    assert not q.isActive
+    assert "lastProgress" in str(err.value)
 
 
 def test_batch_band_rows_within_row_equals_groupby_form(spark, sf_dir):
@@ -1874,7 +1927,8 @@ def test_pretrain_gate_v2_cross_batch_state(spark, tmp_path):
     )
     from spark_streaming_kafka_example_spark.operators import dedup as DD
     from spark_streaming_kafka_example_spark.plans.stream import (
-        _gate_v2_handler,
+        _GATE_V2_ARM,
+        _arm_handler,
     )
     from spark_streaming_kafka_example_spark.streaming.sinks import (
         foreach_batch_sink,
@@ -1926,7 +1980,7 @@ def test_pretrain_gate_v2_cross_batch_state(spark, tmp_path):
     ).first()[0]
     assert other_fp not in seed_fps
 
-    handler = _gate_v2_handler(store, catalog, decisions)
+    handler = _arm_handler(_GATE_V2_ARM, str(tmp_path))
     q = foreach_batch_sink(
         (
             spark.readStream.schema(schema)
@@ -1977,7 +2031,8 @@ def test_image_catalog_cross_batch_growth(spark, tmp_path):
     catalog never hashed it); and a replayed batch, bounded to catalog
     partitions below its own batch_id, reproduces its counts exactly."""
     from spark_streaming_kafka_example_spark.plans.stream import (
-        _image_catalog_handler,
+        _IMG_ARM,
+        _arm_handler,
         _image_chunk_rows,
         _seed_state,
     )
@@ -2012,7 +2067,7 @@ def test_image_catalog_cross_batch_growth(spark, tmp_path):
                     (1_700_000_000 + i, 1_700_000_000 + i),
                 )
 
-    handler = _image_catalog_handler(catalog, decisions)
+    handler = _arm_handler(_IMG_ARM, str(tmp_path))
     q = foreach_batch_sink(
         (
             spark.readStream.schema(schema)
@@ -2054,8 +2109,8 @@ def test_dedup_store_retention_expires_and_readmits(spark, tmp_path):
         fingerprint,
     )
     from spark_streaming_kafka_example_spark.plans.stream import (
-        _FP_TTL_W,
-        _dedup_store_handler,
+        _FP_TTL_ARM,
+        _arm_handler,
     )
     from spark_streaming_kafka_example_spark.streaming.sinks import (
         foreach_batch_sink,
@@ -2099,7 +2154,7 @@ def test_dedup_store_retention_expires_and_readmits(spark, tmp_path):
             .option("maxFilesPerTrigger", "1")
             .parquet(src + "/*")
         ),
-        _dedup_store_handler(store, decisions, retention_batches=_FP_TTL_W),
+        _arm_handler(_FP_TTL_ARM, str(tmp_path)),
         checkpoint=str(tmp_path / "ckpt"),
         mode="append",
     )
@@ -2127,8 +2182,9 @@ def test_minhash_catalog_retention_expires(spark, tmp_path):
 
     from spark_streaming_kafka_example_spark.operators import dedup as DD
     from spark_streaming_kafka_example_spark.plans.stream import (
-        _MH_TTL_W,
-        _mh_catalog_handler,
+        _MH_ARM,
+        _MH_TTL_ARM,
+        _arm_handler,
     )
     from spark_streaming_kafka_example_spark.streaming.sinks import (
         foreach_batch_sink,
@@ -2161,9 +2217,9 @@ def test_minhash_catalog_retention_expires(spark, tmp_path):
                 )
 
     got = {}
-    for mode, retention in [("ttl", _MH_TTL_W), ("unbounded", None)]:
-        catalog = str(tmp_path / f"catalog_{mode}")
-        decisions = str(tmp_path / f"decisions_{mode}")
+    for mode, arm in [("ttl", _MH_TTL_ARM), ("unbounded", _MH_ARM)]:
+        catalog = str(tmp_path / mode / "catalog")
+        decisions = str(tmp_path / mode / "decisions")
         seed = spark.createDataFrame([(2, base)], schema)
         DD.lsh_band_values(
             DD.minhash_signatures(DD.doc_shingles(seed, distinct=False))
@@ -2176,7 +2232,7 @@ def test_minhash_catalog_retention_expires(spark, tmp_path):
                 .option("maxFilesPerTrigger", "1")
                 .parquet(src + "/*")
             ),
-            _mh_catalog_handler(catalog, decisions, retention),
+            _arm_handler(arm, str(tmp_path / mode)),
             checkpoint=str(tmp_path / f"ckpt_{mode}"),
             mode="append",
         )
@@ -2212,7 +2268,7 @@ def test_compact_state_single_partition(spark, tmp_path):
             "batch_id", SF.lit(b)
         ).write.mode("append").partitionBy("batch_id").parquet(state)
 
-    _compact_state(spark, state, out)
+    _compact_state(spark, state, out, "fp string, batch_id int")
     got = spark.read.parquet(out)
     assert sorted(r.fp for r in got.collect()) == ["a", "b", "c", "d", "e"]
     assert [r.batch_id for r in got.select("batch_id").distinct().collect()] == [-1]
@@ -2225,18 +2281,15 @@ def test_compacted_ingest_cross_phase_through_compaction(spark):
     state (the only place phase A's append survives), and a phase-B
     duplicate of the original seed proves the seed rode through the
     collapse too."""
-    from spark_streaming_kafka_example_spark.functions.text import (
-        fingerprint,
-    )
+    from dataclasses import replace
+
     from spark_streaming_kafka_example_spark.plans.stream import (
-        _compacted_two_phase_ingest,
-        _dedup_store_handler,
+        _FP_ARM,
+        _run_arm,
     )
 
     schema = "doc_id long, text string"
-    seed = spark.createDataFrame([(2, "alpha beta")], schema).select(
-        fingerprint("text").alias("fp")
-    )
+    seeded = spark.createDataFrame([(2, "alpha beta")], schema)
     parts = [
         spark.createDataFrame(rows, schema)
         for rows in [
@@ -2246,14 +2299,10 @@ def test_compacted_ingest_cross_phase_through_compaction(spark):
             [(17, "alpha beta")],  # phase B: dup of the seed via compact
         ]
     ]
-    dec_a, dec_b = _compacted_two_phase_ingest(
-        spark, "fpcompact_test_", seed, parts, _dedup_store_handler
-    )
+    arm = replace(_FP_ARM, load=lambda *_: seeded, parts=lambda _: parts)
     got = {
         r.doc_id: r.status
-        for r in spark.read.parquet(dec_a)
-        .unionByName(spark.read.parquet(dec_b))
-        .collect()
+        for r in _run_arm(spark, None, arm, compact=True).collect()
     }
     assert got == {
         11: "novel",
@@ -2395,8 +2444,9 @@ def test_image_catalog_retention_expires(spark, tmp_path):
     3), proven by running the SAME arrival files through the windowed
     and unbounded handlers and contrasting the counts."""
     from spark_streaming_kafka_example_spark.plans.stream import (
-        _IMG_TTL_W,
-        _image_catalog_handler,
+        _IMG_ARM,
+        _IMG_TTL_ARM,
+        _arm_handler,
         _image_chunk_rows,
         _seed_state,
     )
@@ -2428,9 +2478,9 @@ def test_image_catalog_retention_expires(spark, tmp_path):
                 )
 
     got = {}
-    for mode, retention in [("ttl", _IMG_TTL_W), ("unbounded", None)]:
-        catalog = str(tmp_path / f"catalog_{mode}")
-        decisions = str(tmp_path / f"decisions_{mode}")
+    for mode, arm in [("ttl", _IMG_TTL_ARM), ("unbounded", _IMG_ARM)]:
+        catalog = str(tmp_path / mode / "catalog")
+        decisions = str(tmp_path / mode / "decisions")
         _seed_state(
             _image_chunk_rows(spark.createDataFrame([(2, base)], schema)),
             catalog,
@@ -2441,7 +2491,7 @@ def test_image_catalog_retention_expires(spark, tmp_path):
                 .option("maxFilesPerTrigger", "1")
                 .parquet(src + "/*")
             ),
-            _image_catalog_handler(catalog, decisions, retention),
+            _arm_handler(arm, str(tmp_path / mode)),
             checkpoint=str(tmp_path / f"ckpt_{mode}"),
             mode="append",
         )
@@ -2466,17 +2516,18 @@ def test_image_compacted_ingest_cross_phase(spark):
     COMPACTED catalog (the only place phase A's chunk rows survive), and
     a phase-B copy of the seed cover proves the seed rode through the
     collapse too."""
+    from dataclasses import replace
+
     from spark_streaming_kafka_example_spark.plans.stream import (
-        _compacted_two_phase_ingest,
-        _image_catalog_handler,
-        _image_chunk_rows,
+        _IMG_ARM,
+        _run_arm,
     )
 
     schema = "doc_id long, text string"
     base = "the quick brown fox jumps over the lazy dog tonight"
     other = "pack my box with five dozen liquor jugs and carry them"
     third = "sphinx of black quartz judge my vow and then some more"
-    seed = _image_chunk_rows(spark.createDataFrame([(2, base)], schema))
+    seeded = spark.createDataFrame([(2, base)], schema)
     parts = [
         spark.createDataFrame(rows, schema)
         for rows in [
@@ -2486,52 +2537,45 @@ def test_image_compacted_ingest_cross_phase(spark):
             [(17, base)],  # phase B: prior = the seed through the collapse
         ]
     ]
-    dec_a, dec_b = _compacted_two_phase_ingest(
-        spark, "imgcompact_test_", seed, parts, _image_catalog_handler
-    )
+    arm = replace(_IMG_ARM, load=lambda *_: seeded, parts=lambda _: parts)
     got = {
         r.doc_id: r.n_prior_candidates
-        for r in spark.read.parquet(dec_a)
-        .unionByName(spark.read.parquet(dec_b))
-        .collect()
+        for r in _run_arm(spark, None, arm, compact=True).collect()
     }
     assert got == {11: 0, 13: 0, 15: 1, 17: 1}, got
 
 
 def test_compacted_ingest_rejects_retention_curried_handler(spark):
-    """r18 (r17 ADVICE): _compact_state is unbounded-state-only, and the
-    contract is now CHECKABLE — _compacted_two_phase_ingest builds its
-    handlers with an explicit retention_batches=None, so a factory
-    already curried with a TTL window fails fast with a TypeError
-    instead of silently corrupting the retention semantics."""
+    """_compact_state is unbounded-state-only, and the contract is
+    CHECKABLE in the runner: asking it to compact an arm that carries a
+    TTL window fails fast with a TypeError (before any write) instead of
+    silently corrupting the retention semantics. The cluster map, whose
+    rows reference each other, cannot take a TTL window at all."""
+    from dataclasses import replace
+
     import pytest as _pytest
 
-    from spark_streaming_kafka_example_spark.functions.text import (
-        fingerprint,
-    )
     from spark_streaming_kafka_example_spark.plans.stream import (
-        _compacted_two_phase_ingest,
-        _dedup_store_handler,
+        _FP_ARM,
+        _NDINC_ARM,
+        _run_arm,
     )
 
     schema = "doc_id long, text string"
-    seed = spark.createDataFrame([(2, "alpha beta")], schema).select(
-        fingerprint("text").alias("fp")
-    )
     parts = [
         spark.createDataFrame([(11 + 2 * i, f"word {i}")], schema)
         for i in range(4)
     ]
-
-    def curried(state_dir, decisions_dir):  # no retention_batches param
-        return _dedup_store_handler(
-            state_dir, decisions_dir, retention_batches=2
-        )
-
+    ttl_arm = replace(
+        _FP_ARM,
+        ttl=2,
+        load=lambda *_: spark.createDataFrame([(2, "alpha beta")], schema),
+        parts=lambda _: parts,
+    )
     with _pytest.raises(TypeError):
-        _compacted_two_phase_ingest(
-            spark, "fpcompact_guard_", seed, parts, curried
-        )
+        _run_arm(spark, None, ttl_arm, compact=True)
+    with _pytest.raises(TypeError):
+        replace(_NDINC_ARM, ttl=2)
 
 
 def test_pretrain_gate_v3_cross_batch_image(spark, tmp_path):
@@ -2550,8 +2594,9 @@ def test_pretrain_gate_v3_cross_batch_image(spark, tmp_path):
     from spark_streaming_kafka_example_spark.operators import dedup as DD
     from spark_streaming_kafka_example_spark.plans.stream import (
         _GATE_COVER_LEN,
+        _GATE_V3_ARM,
+        _arm_handler,
         _gate_cover,
-        _gate_v2_handler,
         _image_chunk_rows,
         _seed_state,
     )
@@ -2601,7 +2646,7 @@ def test_pretrain_gate_v3_cross_batch_image(spark, tmp_path):
                     (1_700_000_000 + i, 1_700_000_000 + i),
                 )
 
-    handler = _gate_v2_handler(store, catalog, decisions, imgcatalog)
+    handler = _arm_handler(_GATE_V3_ARM, str(tmp_path))
     q = foreach_batch_sink(
         (
             spark.readStream.schema(schema)
@@ -2650,8 +2695,9 @@ def test_stream_split_by_neardup_incremental_cross_batch(spark, tmp_path):
     from collections import defaultdict
 
     from spark_streaming_kafka_example_spark.plans.stream import (
+        _NDINC_ARM,
+        _arm_handler,
         _batch_band_rows,
-        _neardup_clustermap_handler,
     )
     from spark_streaming_kafka_example_spark.plans.textprep import (
         cluster_split_column,
@@ -2724,7 +2770,7 @@ def test_stream_split_by_neardup_incremental_cross_batch(spark, tmp_path):
     catalog = str(tmp_path / "catalog")
     map_dir = str(tmp_path / "clustermap")
     decisions = str(tmp_path / "decisions")
-    handler = _neardup_clustermap_handler(catalog, map_dir, decisions)
+    handler = _arm_handler(_NDINC_ARM, str(tmp_path))
     q = foreach_batch_sink(
         (
             spark.readStream.schema(schema)
@@ -2772,8 +2818,9 @@ def test_neardup_inc_compacted_adopts_through_collapse(spark, tmp_path):
     its rep through the COMPACTED catalog + map (the only place phase
     A's state survives), where the stateless own-fp gate disagrees."""
     from spark_streaming_kafka_example_spark.plans.stream import (
+        _NDINC_ARM,
+        _arm_handler,
         _compact_state,
-        _neardup_clustermap_handler,
     )
     from spark_streaming_kafka_example_spark.plans.textprep import (
         cluster_split_column,
@@ -2796,21 +2843,26 @@ def test_neardup_inc_compacted_adopts_through_collapse(spark, tmp_path):
     }
     assert own[13] != own[20], "fixture regression: gates agree"
 
-    cat_a, map_a, dec_a, cat_b, map_b, dec_b = (
-        str(tmp_path / d)
-        for d in ("cat_a", "map_a", "dec_a", "cat_b", "map_b", "dec_b")
+    root_a, root_b = str(tmp_path / "a"), str(tmp_path / "b")
+    _arm_handler(_NDINC_ARM, root_a)(
+        spark.createDataFrame([(13, x_txt)], schema), 0
     )
-    handler_a = _neardup_clustermap_handler(cat_a, map_a, dec_a)
-    handler_a(spark.createDataFrame([(13, x_txt)], schema), 0)
+    for name, state_schema in _NDINC_ARM.state.items():
+        _compact_state(
+            spark,
+            os.path.join(root_a, name),
+            os.path.join(root_b, name),
+            state_schema,
+        )
+    _arm_handler(_NDINC_ARM, root_b)(
+        spark.createDataFrame([(20, y_txt)], schema), 0
+    )
 
-    _compact_state(spark, cat_a, cat_b)
-    _compact_state(spark, map_a, map_b)
+    def read(name):
+        return spark.read.parquet(os.path.join(root_b, name)).collect()
 
-    handler_b = _neardup_clustermap_handler(cat_b, map_b, dec_b)
-    handler_b(spark.createDataFrame([(20, y_txt)], schema), 0)
-
-    reps = {r.doc_id: r.rep_id for r in spark.read.parquet(map_b).collect()}
-    got = {r.doc_id: r.split for r in spark.read.parquet(dec_b).collect()}
+    reps = {r.doc_id: r.rep_id for r in read("clustermap")}
+    got = {r.doc_id: r.split for r in read("decisions")}
     assert reps[20] == 13, reps
     assert got[20] == own[13] != own[20]
 
@@ -2822,9 +2874,10 @@ def test_embedding_catalog_cross_batch_growth(spark, tmp_path):
     seed never saw it); and a replayed batch, bounded to partitions
     below its own batch_id, reproduces its counts exactly."""
     from spark_streaming_kafka_example_spark.plans.stream import (
+        _EMB_ARM,
         _EMB_ARRIVAL_SCHEMA,
+        _arm_handler,
         _emb_code_rows,
-        _embedding_catalog_handler,
         _seed_state,
     )
     from spark_streaming_kafka_example_spark.streaming.sinks import (
@@ -2859,7 +2912,7 @@ def test_embedding_catalog_cross_batch_growth(spark, tmp_path):
                     (1_700_000_000 + i, 1_700_000_000 + i),
                 )
 
-    handler = _embedding_catalog_handler(codes, vecs, decisions)
+    handler = _arm_handler(_EMB_ARM, str(tmp_path))
     q = foreach_batch_sink(
         (
             spark.readStream.schema(_EMB_ARRIVAL_SCHEMA)
@@ -2898,10 +2951,11 @@ def test_embedding_catalog_retention_expires(spark, tmp_path):
     by running the SAME arrival files through the windowed and
     unbounded handlers and contrasting the counts."""
     from spark_streaming_kafka_example_spark.plans.stream import (
+        _EMB_ARM,
         _EMB_ARRIVAL_SCHEMA,
-        _EMBCAT_TTL_W,
+        _EMB_TTL_ARM,
+        _arm_handler,
         _emb_code_rows,
-        _embedding_catalog_handler,
         _seed_state,
     )
     from spark_streaming_kafka_example_spark.streaming.sinks import (
@@ -2932,10 +2986,10 @@ def test_embedding_catalog_retention_expires(spark, tmp_path):
                 )
 
     got = {}
-    for mode, retention in [("ttl", _EMBCAT_TTL_W), ("unbounded", None)]:
-        codes = str(tmp_path / f"codes_{mode}")
-        vecs = str(tmp_path / f"vectors_{mode}")
-        decisions = str(tmp_path / f"decisions_{mode}")
+    for mode, arm in [("ttl", _EMB_TTL_ARM), ("unbounded", _EMB_ARM)]:
+        codes = str(tmp_path / mode / "codes")
+        vecs = str(tmp_path / mode / "vectors")
+        decisions = str(tmp_path / mode / "decisions")
         seed_df = rows([(2, vec(1))]).localCheckpoint()
         _seed_state(_emb_code_rows(seed_df), codes)
         _seed_state(seed_df.select("doc_id", "embedding"), vecs)
@@ -2945,7 +2999,7 @@ def test_embedding_catalog_retention_expires(spark, tmp_path):
                 .option("maxFilesPerTrigger", "1")
                 .parquet(src + "/*")
             ),
-            _embedding_catalog_handler(codes, vecs, decisions, retention),
+            _arm_handler(arm, str(tmp_path / mode)),
             checkpoint=str(tmp_path / f"ckpt_{mode}"),
             mode="append",
         )
